@@ -12,7 +12,6 @@ epoch ledger.
 from __future__ import annotations
 
 import json
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -134,7 +133,7 @@ class CdcEngine:
             self.table.alter(alters)
 
         # 2. shape data rows to the (evolved) table schema
-        shaped, post = self._shape(batch, list(self.table.snapshot.schema.fields))
+        shaped, post = self._shape(batch)
 
         if self.table.mode == "mor":
             # 3+4 fused: the lake clusters by bucket and dedups per
@@ -151,11 +150,11 @@ class CdcEngine:
         # 4. MERGE under the idempotent ledger
         return self.table.merge(deduped, epoch)
 
-    def _shape(self, batch: DataFrame, schema_fields: list,
+    def _shape(self, batch: DataFrame,
                added_gate: dict[str, int] | None = None):
-        """Project a raw change batch onto a FROZEN schema view (list of
-        StructFields): key + op + lsn + payload columns, missing payload
-        columns as typed nulls. Text extraction is deferred until AFTER
+        """Project a raw change batch onto the table's current schema:
+        key + op + lsn + payload columns, missing payload columns as
+        typed nulls. Text extraction is deferred until AFTER
         dedup (returned as ``post``) so the Arrow UDF only ever runs on
         rows that survive the max-lsn race — at high update rates that
         is a large constant-factor saving.
@@ -167,7 +166,7 @@ class CdcEngine:
         the table schema yet), so the coalesced shape nulls it out the
         same way instead of resurrecting it."""
         key = self.table.snapshot.key_col
-        types = {f.name: f.dataType for f in schema_fields}
+        types = {f.name: f.dataType for f in self.table.snapshot.schema.fields}
         payload_cols = list(types)
         derive_text = "html" in batch.columns and "text" in payload_cols
         data = batch.filter(F.col("op") != "schema")
@@ -188,99 +187,70 @@ class CdcEngine:
         return data.select(*cols), post
 
     def run(self, change_log: DataFrame, epochs: list[int] | None = None,
-            max_inflight: int | None = None,
-            max_coalesce: int | None = None) -> list[dict]:
+            max_coalesce: int = 8) -> list[dict]:
         """Tail the log in epoch order (resumable: already-applied epochs
         short-circuit via the ledger).
 
-        ONE upfront scan discovers both the epoch list and every epoch's
-        schema directives (collect_list skips the nulls of non-schema
-        rows) — serial pre-work is a single job regardless of epoch
-        count, which matters because per-epoch serial cost is the Amdahl
-        term of the whole apply path (BASELINE.md).
+        ONE upfront discovery yields every epoch's exact row count and
+        schema directives, so serial pre-work is a single job regardless
+        of epoch count — per-epoch serial cost is the Amdahl term of the
+        whole apply path (BASELINE.md). A local epoch-partitioned
+        parquet log reads its row counts from the parquet footers (a
+        driver-side metadata read) and scans only the op=='schema' rows,
+        pruned to three narrow columns; any other frame (a streaming
+        micro-batch, a filtered view) counts rows in the same scan that
+        collects the directives (collect_list skips the nulls of
+        non-schema rows). An explicit ``epochs`` list applies just those
+        epochs off the same discovery.
 
         MoR mode COALESCES a backlog: runs of up to ``max_coalesce``
-        (default 8) consecutive pending epochs with no schema directive
-        between them apply as ONE job — union the epochs, max-lsn dedup
-        across the whole range, one delta write, one atomic commit that
-        ledgers every constituent epoch (merge_commit_batch). This is
-        semantically transparent: lsn is globally monotone, so the
-        per-key max-lsn survivor of the union is exactly the row
-        sequential application would leave visible, and the MoR read
-        path merges deltas by max lsn anyway. What it buys is
-        amortization of the per-epoch fixed cost that profiling
-        (tools/cdc_profile.py) shows dominates small epochs — the Spark
-        job itself (scheduling, python workers, 32 parquet
-        opens/closes), ~5-6 s per 1M-event epoch on this host, against
-        commit+checkpoint at ~5 ms. A batch never spans a schema-change
-        epoch: alters apply in epoch order at batch boundaries, so every
-        batch is shaped against one frozen schema view. A LIVE tail
-        (epoch-by-epoch arrival) degenerates to batches of 1 — coalescing
-        engages exactly when there's a backlog to catch up on, the same
-        adaptive batching a Structured Streaming microbatch trigger does.
+        consecutive pending epochs with no rename between them apply as
+        ONE job — union the epochs, max-lsn dedup across the whole
+        range, one delta write, one atomic commit that ledgers every
+        constituent epoch (merge_commit_batch). This is semantically
+        transparent: lsn is globally monotone, so the per-key max-lsn
+        survivor of the union is exactly the row sequential application
+        would leave visible, and the MoR read path merges deltas by max
+        lsn anyway. What it buys is amortization of the per-epoch fixed
+        cost that dominates small epochs — the Spark job itself
+        (scheduling, python workers, one parquet open/close per bucket)
+        against a commit+checkpoint of ~5 ms. ``max_coalesce=1`` is the
+        sequential reference. A LIVE tail degenerates to batches of what
+        has arrived — coalescing engages exactly when there's a backlog
+        to catch up on, the same adaptive batching a Structured
+        Streaming micro-batch trigger does.
 
-        MoR also PIPELINES batches: up to ``max_inflight`` (default 2)
-        batch PREPARE jobs (scan -> dedup -> delta write) run
-        concurrently — a delta never reads the target, so only the
-        ledger COMMIT must stay ordered. Measured honestly (round 5,
-        local[32], 16M events, pre-coalescing): break-even on this
-        saturated single host (24.8 s vs 25.0 s at 4x4M epochs; 99.7 s
-        vs 102.8 s at 16x1M — the prepare job already uses every core).
-        The overlap pays on a real cluster where the driver's per-epoch
-        serial work and stragglers leave executors idle between jobs;
-        here it simply doesn't hurt. Each batch's files carry the
-        schema_epoch tag of the view they were shaped against, so
-        _align's rename/add replay stays exact even when a later
-        batch's ALTER is already live. On a prepare failure nothing
-        from that batch onward commits — already-prepared later files
-        are orphans reclaimed by expire_snapshots' grace window, and a
-        rerun resumes from the ledger. Both disabled for CoW, where
-        epoch N+1's merge reads the state epoch N wrote.
+        Batches run in epoch order on the caller's thread: alter ->
+        shape -> prepare (scan, dedup, delta write) -> commit, so every
+        Spark job carries the caller's job group and description, and a
+        cancel of that group stops the apply. The batch's summed row
+        count is the one gate of the dedup plan: it bounds the batch's
+        distinct keys, and _prepare_mor attempts the broadcast two-pass
+        only under that bound. On a failure nothing from that batch on
+        commits and a rerun resumes from the ledger. CoW applies epoch by
+        epoch, since epoch N+1's merge reads the state epoch N wrote.
         """
-        kest: dict[int, int] = {}
-        rest: dict[int, int] | None = None
-        if epochs is None:
-            # discovery, cheapest first: when the log is file-backed and
-            # epoch-partitioned, per-epoch ROW counts come straight from
-            # the parquet footers (driver metadata read, no job) and the
-            # only scan is the op=='schema' descriptor filter — pruned to
-            # three narrow columns. _prepare_mor turns the row bound into
-            # an EXACT key count via its checkpointed pass-1 aggregate.
-            # Non-file logs keep the r5 single-pass discovery whose
-            # approx_count_distinct rides the scan; its per-batch sum
-            # gates the broadcast two-pass dedup the same way.
-            rest = _epoch_rows_from_footers(change_log)
-            if rest is not None:
-                epochs = sorted(rest)
-                desc = {e: [] for e in epochs}
-                for r in (change_log.filter(F.col("op") == "schema")
-                          .select("epoch", "schema_descriptor").collect()):
-                    desc.setdefault(r[0], []).append(r[1])
-            else:
-                keyc = self.table.snapshot.key_col
-                rows = (change_log.groupBy("epoch").agg(
-                    F.collect_list(F.when(F.col("op") == "schema",
-                                          F.col("schema_descriptor"))).alias("ds"),
-                    F.approx_count_distinct(keyc).alias("ks"))
-                    .collect())
-                epochs = sorted(r["epoch"] for r in rows)
-                desc = {r["epoch"]: [d for d in r["ds"] if d] for r in rows}
-                kest = {r["epoch"]: int(r["ks"]) for r in rows}
-        else:
-            desc = {}
+        rows = _epoch_rows_from_footers(change_log)
+        if rows is not None:
+            desc: dict[int, list[str]] = {e: [] for e in rows}
             for r in (change_log.filter(F.col("op") == "schema")
                       .select("epoch", "schema_descriptor").collect()):
                 desc.setdefault(r[0], []).append(r[1])
-        if max_inflight is None:
-            max_inflight = int(os.environ.get("TENZIR_SPARK_CDC_INFLIGHT", "2"))
-        if max_coalesce is None:
-            max_coalesce = int(os.environ.get("TENZIR_SPARK_CDC_COALESCE", "8"))
+        else:
+            found = (change_log.groupBy("epoch").agg(
+                F.collect_list(F.when(F.col("op") == "schema",
+                                      F.col("schema_descriptor"))).alias("ds"),
+                F.count(F.lit(1)).alias("n"))
+                .collect())
+            rows = {r["epoch"]: int(r["n"]) for r in found}
+            desc = {r["epoch"]: [d for d in r["ds"] if d] for r in found}
+        if epochs is None:
+            epochs = sorted(rows)
         if self.table.mode != "mor":
             return [self.apply_epoch(change_log, e, descriptors=desc.get(e, []))
                     for e in epochs]
-        return self._run_batched(change_log, epochs, desc,
-                                 max(max_inflight, 1), max(max_coalesce, 1),
-                                 kest=kest, rest=rest)
+        return self._run_batched(change_log, epochs, desc, rows,
+                                 max(max_coalesce, 1))
 
     def _batches(self, epochs: list[int], desc: dict,
                  max_coalesce: int) -> list[list[int]]:
@@ -314,12 +284,8 @@ class CdcEngine:
         return out
 
     def _run_batched(self, change_log: DataFrame, epochs: list[int],
-                     desc: dict, max_inflight: int,
-                     max_coalesce: int,
-                     kest: dict[int, int] | None = None,
-                     rest: dict[int, int] | None = None) -> list[dict]:
-        from concurrent.futures import ThreadPoolExecutor
-
+                     desc: dict, rows: dict[int, int],
+                     max_coalesce: int) -> list[dict]:
         self.table.refresh()
         results: dict[int, dict] = {}
         pending: list[int] = []
@@ -330,68 +296,42 @@ class CdcEngine:
                               "skipped": True}
             else:
                 pending.append(e)
-        submitted: list[tuple[list[int], object]] = []
-        with ThreadPoolExecutor(max_workers=max_inflight) as ex:
-            try:
-                for batch in self._batches(pending, desc, max_coalesce):
-                    # ALL the batch's alters serially, in epoch order,
-                    # BEFORE shaping — metadata-only, so running them
-                    # ahead of earlier data commits is safe (_align
-                    # replays renames/adds from each file's schema_epoch
-                    # tag); adds record their epoch so _shape can gate
-                    # per-row exactly like sequential application would
-                    alters: list[dict] = []
-                    added: dict[str, int] = {}
-                    for e in batch:
-                        for d in desc.get(e, []):
-                            if not d:
-                                continue
-                            a = descriptor_to_alter(d)
-                            alters.append(a)
-                            if a["op"] == "add":
-                                added[a["name"]] = e
-                    if alters:
-                        self.table.alter(alters)
-                    fields = list(self.table.snapshot.schema.fields)
-                    sepoch = len(self.table.snapshot.schema_log)
-                    # contiguous range -> BETWEEN prunes the epoch=
-                    # partition dirs of the log at the source
-                    shaped, post = self._shape(
-                        change_log.filter(
-                            F.col("epoch").between(batch[0], batch[-1])),
-                        fields, added_gate=added)
-                    # batch key estimate: sum of per-epoch approx counts —
-                    # an upper bound on the union (overlap only shrinks
-                    # it), so an overestimate errs toward the safe
-                    # at-scale fallback, never toward an oversized
-                    # broadcast
-                    batch_est = (sum(kest.get(e, 0) for e in batch)
-                                 if kest and all(e in kest for e in batch)
-                                 else None)
-                    batch_rows = (sum(rest.get(e, 0) for e in batch)
-                                  if rest and all(e in rest for e in batch)
-                                  else None)
-                    submitted.append((batch, ex.submit(
-                        self.table._prepare_mor, shaped, "op", "lsn",
-                        False, post, fields, sepoch, batch_est,
-                        batch_rows)))
-                for batch, fut in submitted:
-                    new_files, entry = fut.result()
-                    got = self.table.merge_commit_batch(
-                        [str(e) for e in batch], new_files, entry)
-                    for e in batch:
-                        results[e] = got[str(e)]
-            finally:
-                for _, fut in submitted:
-                    fut.cancel()
+        for batch in self._batches(pending, desc, max_coalesce):
+            # ALL the batch's alters in epoch order BEFORE shaping; adds
+            # record their epoch so _shape can gate per-row exactly like
+            # sequential application would
+            alters: list[dict] = []
+            added: dict[str, int] = {}
+            for e in batch:
+                for d in desc.get(e, []):
+                    if not d:
+                        continue
+                    a = descriptor_to_alter(d)
+                    alters.append(a)
+                    if a["op"] == "add":
+                        added[a["name"]] = e
+            if alters:
+                self.table.alter(alters)
+            # contiguous range -> BETWEEN prunes the epoch= partition dirs
+            # of the log at the source
+            shaped, post = self._shape(
+                change_log.filter(F.col("epoch").between(batch[0], batch[-1])),
+                added_gate=added)
+            # an epoch the discovery did not see has no rows in the log
+            new_files, entry = self.table._prepare_mor(
+                shaped, "op", "lsn", False, post,
+                batch_rows=sum(rows.get(e, 0) for e in batch))
+            got = self.table.merge_commit_batch(
+                [str(e) for e in batch], new_files, entry)
+            for e in batch:
+                results[e] = got[str(e)]
         return [results[e] for e in epochs]
 
     # ---------------------------------------------------------- streaming
 
     def run_stream(self, log_dir: str, checkpoint_dir: str,
                    trigger: dict | None = None,
-                   max_inflight: int | None = None,
-                   max_coalesce: int | None = None):
+                   max_coalesce: int = 8):
         """LIVE tail: Structured Streaming file source over the growing
         epoch-partitioned change log, applied per micro-batch through
         the same run() path (coalescing + ledger).
@@ -429,8 +369,7 @@ class CdcEngine:
             if not batch_df.head(1):
                 return
             self.table.refresh()
-            self.run(batch_df, max_inflight=max_inflight,
-                     max_coalesce=max_coalesce)
+            self.run(batch_df, max_coalesce=max_coalesce)
 
         writer = (stream.writeStream
                   .foreachBatch(apply_batch)

@@ -4,7 +4,6 @@ and an exactly-once epoch ledger. See format.py for the on-disk layout.
 
 from __future__ import annotations
 
-import os
 import time
 import uuid
 
@@ -39,27 +38,11 @@ _WIDEN_OK = {
 }
 
 
-def _distribute_by_bucket(df: DataFrame, nb: int) -> DataFrame:
-    """Hash-distribute rows by their __b bucket column ahead of the
-    partitionBy write. TENZIR_SPARK_WRITE_FANOUT picks the strategy:
-    0 (default) forces EXACTLY nb partitions — an explicit count, which
-    AQE respects, so the write (and any post-dedup Python UDF fused into
-    this stage) spreads over ~nb tasks instead of the single task AQE's
-    advisory-size coalescing collapses a small survivor set into (the
-    round-5 stage profile measured that collapse as a flat 2.5 s
-    single-task tail at EVERY width — a pure Amdahl term that alone cost
-    ~0.05 N->4N scaling efficiency). File count stays <=nb (partitionBy
-    splits by __b inside each task). N>0 forces nb*N partitions — more
-    write parallelism per bucket at the cost of N files/bucket (the
-    earlier A/B measured nb*8 per-epoch as strictly worse: 86 s vs 25 s
-    per 16M-event apply — tiny-file explosion); -1 restores pure-AQE
-    coalescing."""
-    fanout = int(os.environ.get("TENZIR_SPARK_WRITE_FANOUT", "0"))
-    if fanout > 0:
-        return df.repartition(nb * fanout, F.col("__b"))
-    if fanout < 0:
-        return df.repartition(F.col("__b"))
-    return df.repartition(nb, F.col("__b"))
+# broadcast two-pass dedup limits (LakeTable._prepare_mor): a batch of at
+# most EXACT_MAX_ROWS rows attempts pass 1, whose (key, max lsn) set is
+# broadcast while it holds at most DEDUP_BCAST_KEYS keys (~64 MB)
+DEDUP_BCAST_KEYS = 1_000_000
+EXACT_MAX_ROWS = 512_000_000
 
 
 class LakeTable:
@@ -410,16 +393,6 @@ class LakeTable:
                    pre_deduplicated: bool = True, post_dedup=None) -> dict:
         new_files, entry = self._prepare_mor(changes, op_col, lsn_col,
                                              pre_deduplicated, post_dedup)
-        return self.merge_commit(ek, new_files, entry)
-
-    def merge_commit(self, ek: str, new_files: list[DataFile], entry: dict) -> dict:
-        """Publish a prepared MoR delta: ledger entry + snapshot swap +
-        lineage checkpoint. Split from _prepare_mor so a pipelined tail
-        (CdcEngine.run) can PREPARE several epochs concurrently while
-        committing strictly in epoch order — the per-epoch serial driver
-        work (job scheduling, footer stats) overlaps with the next
-        epoch's scan instead of serializing the whole apply
-        (BASELINE.md's Amdahl term)."""
         return self.merge_commit_batch([ek], new_files, entry)[ek]
 
     def merge_commit_batch(self, eks: list[str], new_files: list[DataFile],
@@ -452,64 +425,56 @@ class LakeTable:
 
     def _prepare_mor(self, changes: DataFrame, op_col: str, lsn_col: str,
                      pre_deduplicated: bool = True, post_dedup=None,
-                     schema_fields: list | None = None,
-                     schema_epoch: int | None = None,
-                     key_est: int | None = None,
-                     rows_est: int | None = None) -> tuple[list[DataFile], dict]:
+                     batch_rows: int | None = None) -> tuple[list[DataFile], dict]:
         """Merge-on-read apply: the epoch's heavy shuffle carries only
         per-partition dedup SURVIVORS, never raw duplicates.
 
-        ``schema_fields``/``schema_epoch`` freeze the schema view the
-        delta is shaped against — under a pipelined tail a LATER epoch's
-        ALTER may already be live on the table while this epoch's job
-        runs, and files must be tagged with the schema they actually
-        contain so _align replays exactly the right rename/add suffix.
-
         With ``pre_deduplicated=False`` the max-lsn dedup picks one of
-        two plans by the batch's (estimated) distinct-key count:
+        two plans. The one gate is ``batch_rows``, the batch's exact row
+        count from CdcEngine.run's discovery — an upper bound on its
+        distinct keys:
 
-        * **broadcast two-pass** (attempted when the batch's footer row
-          count ``rows_est`` is bounded — default <=512M rows, env
-          TENZIR_SPARK_CDC_EXACT_MAX_ROWS — or an HLL ``key_est`` says
-          the key set is small, default <=1M keys / ~64 MB): pass 1
-          aggregates max(lsn) per key — a FIXED-WIDTH agg buffer that
-          updates in place, ~4x cheaper per row than copying a payload
-          struct — capped at max_bcast+1 rows and EAGERLY
+        * **broadcast two-pass** (0 < batch_rows <= EXACT_MAX_ROWS):
+          pass 1 aggregates max(lsn) per key — a FIXED-WIDTH agg buffer
+          that updates in place, ~4x cheaper per row than copying a
+          payload struct — capped at DEDUP_BCAST_KEYS+1 rows and EAGERLY
           localCheckpointed, so the exact key count is read off the
-          materialized frame (r6: replaces the per-run HLL estimate
-          job) and the broadcast build never recomputes the aggregate.
-          Pass 2 re-scans the batch with a broadcast left-semi join on
-          (key, lsn), keeping survivors with their payload pipelined
-          straight into the bucket repartition. Before the join, rows
-          with ``lsn < min over keys of max(lsn)`` are dropped — an
-          always-correct superset filter (every survivor's lsn is its
-          key's max, hence >= the smallest such max) that reaches the
-          parquet scan as a pushed predicate: on an lsn-ordered log
-          (any WAL) it prunes whole row groups — 94.7% of the bench
-          log's rows never decode (64M -> 3.4M). No payload-carrying
-          shuffle AT ALL: the only exchange is the tiny pass-1 agg.
-          Requires lsn to be unique per key within the batch (a WAL
-          position — the log contract).
-        * **struct max_by fallback** (no bound at all, or the
-          checkpointed pass 1 overflows max_bcast — the 10^10-scale
-          regime where a batch touches hundreds of millions of urls):
-          groupBy(__bucket, key) with a map-side partial aggregate, so
-          hot keys (Zipf domains) collapse to one row per input
-          partition BEFORE the exchange — the north rule's skew defense
-          for free — and only survivors shuffle.
+          materialized frame and the broadcast build never recomputes
+          the aggregate. Pass 2 re-scans the batch with a broadcast
+          left-semi join on (key, lsn), keeping survivors with their
+          payload pipelined straight into the bucket repartition. Before
+          the join, rows with ``lsn < min over keys of max(lsn)`` are
+          dropped — an always-correct superset filter (every survivor's
+          lsn is its key's max, hence >= the smallest such max) that
+          reaches the parquet scan as a pushed predicate: on an
+          lsn-ordered log (any WAL) it prunes whole row groups — 94.7%
+          of the bench log's rows never decode (64M -> 3.4M). No
+          payload-carrying shuffle AT ALL: the only exchange is the tiny
+          pass-1 agg. Requires lsn to be unique per key within the batch
+          (a WAL position — the log contract).
+        * **struct max_by fallback** (no row count — a single-epoch
+          merge() — or pass 1 overflows DEDUP_BCAST_KEYS, the
+          10^10-scale regime where a batch touches hundreds of millions
+          of urls): groupBy(__bucket, key) with a map-side partial
+          aggregate, so hot keys (Zipf domains) collapse to one row per
+          input partition BEFORE the exchange — the north rule's skew
+          defense for free — and only survivors shuffle.
 
-        Both paths end with an EXPLICIT nb-partition repartition (see
-        _distribute_by_bucket) so the post-dedup text UDF and the
-        parquet write spread over ~nb tasks.
+        Both paths end with an EXPLICIT nb-partition repartition by
+        bucket, which AQE respects, so the post-dedup text UDF and the
+        parquet write spread over ~nb tasks instead of the single task
+        AQE's advisory-size coalescing collapses a small survivor set
+        into (round 5 measured that collapse as a flat 2.5 s single-task
+        tail). File count stays <=nb: partitionBy splits by __b inside
+        each task.
 
         No target read, no join against the table; rows_applied and the
         lsn watermark come from the parquet footers of the files just
         written."""
-        if schema_fields is None:
-            schema_fields = list(self.snapshot.schema.fields)
+        fields = list(self.snapshot.schema.fields)
         key = self.snapshot.key_col
         nb = self.snapshot.num_buckets
-        payload = [f.name for f in schema_fields]
+        payload = [f.name for f in fields]
         in_cols = [c for c in payload if c != key and c in changes.columns]
         delta = changes.select(
             F.col(key),
@@ -519,20 +484,15 @@ class LakeTable:
         )
         clustered = False
         if not pre_deduplicated:
-            max_bcast = int(os.environ.get("TENZIR_SPARK_DEDUP_BCAST_KEYS",
-                                           "1000000"))
-            exact_rows = int(os.environ.get(
-                "TENZIR_SPARK_CDC_EXACT_MAX_ROWS", str(512_000_000)))
             mx = None
-            if ((rows_est is not None and 0 < rows_est <= exact_rows)
-                    or (key_est is not None and 0 < key_est <= max_bcast)):
+            if batch_rows is not None and 0 < batch_rows <= EXACT_MAX_ROWS:
                 mx = (delta.groupBy(key)
                       .agg(F.max("__lsn").alias("__mx"))
-                      .limit(max_bcast + 1)
+                      .limit(DEDUP_BCAST_KEYS + 1)
                       .localCheckpoint(eager=True))
                 stats = mx.agg(F.count(F.lit(1)).alias("n"),
                                F.min("__mx").alias("m")).collect()[0]
-                if stats["n"] > max_bcast:
+                if stats["n"] > DEDUP_BCAST_KEYS:
                     mx = None  # key set too large: at-scale fallback
             if mx is not None:
                 lo = stats["m"]
@@ -553,16 +513,15 @@ class LakeTable:
                 delta = (delta.groupBy("__b", key).agg(row.alias("__r"))
                          .select("__b", key,
                                  *[F.col(f"__r.{c}").alias(c) for c in others]))
-            delta = _distribute_by_bucket(delta, nb)
+            delta = delta.repartition(nb, F.col("__b"))
             clustered = True
         if post_dedup is not None:
             delta = post_dedup(delta)
         # typed nulls for schema columns the stream didn't carry
-        for f in schema_fields:
+        for f in fields:
             if f.name not in delta.columns:
                 delta = delta.withColumn(f.name, F.lit(None).cast(f.dataType))
-        new_files = self._write_bucketed(delta, kind="delta", clustered=clustered,
-                                         schema_epoch=schema_epoch)
+        new_files = self._write_bucketed(delta, kind="delta", clustered=clustered)
         watermark = None
         for f in new_files:
             st = f.stats.get("__lsn")
@@ -576,14 +535,13 @@ class LakeTable:
     # ------------------------------------------------------------- internals
 
     def _write_bucketed(self, df: DataFrame, only_buckets: list[int] | None = None,
-                        kind: str = "base", clustered: bool = False,
-                        schema_epoch: int | None = None) -> list[DataFile]:
+                        kind: str = "base", clustered: bool = False) -> list[DataFile]:
         """Write rows as one parquet file per bucket under a fresh commit
         dir; returns DataFile entries with footer-accurate stats.
         ``clustered=True`` promises df already carries a __b bucket column
-        and is hash-distributed by it — no extra shuffle is added.
-        ``schema_epoch`` overrides the live snapshot's schema-log length
-        for pipelined writers whose df was shaped against an older view."""
+        and is hash-distributed by it — no extra shuffle is added;
+        otherwise rows go through the same explicit nb-partition
+        repartition as _prepare_mor's."""
         key = self.snapshot.key_col
         nb = self.snapshot.num_buckets
         stat_cols = [key] + (["__lsn"] if "__lsn" in df.columns else [])
@@ -593,11 +551,10 @@ class LakeTable:
             df = df.withColumn("__b", bucket_expr(key, nb))
             if only_buckets is not None:
                 df = df.filter(F.col("__b").isin([int(b) for b in only_buckets]))
-            df = _distribute_by_bucket(df, nb)
+            df = df.repartition(nb, F.col("__b"))
         (df.write.mode("overwrite").partitionBy("__b").parquet(out_dir))
         files: list[DataFile] = []
-        if schema_epoch is None:
-            schema_epoch = len(self.snapshot.schema_log)
+        schema_epoch = len(self.snapshot.schema_log)
         targets: list[tuple[int, str, str]] = []
         for bdir in self.io.list(out_dir):
             if not bdir.startswith("__b="):

@@ -252,10 +252,10 @@ def test_mor_final_state_matches_replay(spark, change_log, tmp_path_factory):
 
 def test_footer_and_scan_discovery_identical(spark, change_log,
                                              tmp_path_factory, monkeypatch):
-    """r6: run() discovers epochs/row-bounds from parquet footers when
-    the log is file-backed (no discovery job, exact checkpointed pass-1
-    with the lsn watermark prefilter); non-file logs keep the scan+HLL
-    discovery. Both must leave byte-identical final state on the same
+    """run() reads per-epoch row counts from parquet footers when the
+    log is file-backed (no discovery job); non-file logs count rows in
+    the one discovery scan that also collects the schema directives.
+    Both row sources must leave byte-identical final state on the same
     log."""
     import tenzir_spark.cdc.engine as eng_mod
     log_dir = str(tmp_path_factory.mktemp("cdclog") / "log")
@@ -284,12 +284,13 @@ def test_dedup_bcast_and_fallback_paths_identical(spark, change_log,
                                                   tmp_path_factory,
                                                   monkeypatch):
     """_prepare_mor's two dedup plans (broadcast two-pass vs struct
-    max_by fallback) must leave byte-identical final state. The run()
-    discovery estimates distinct keys and picks broadcast here; forcing
-    the threshold to 0 exercises the at-scale fallback on the same log."""
+    max_by fallback) must leave byte-identical final state. The batch's
+    row bound picks broadcast here; a key cap of 0 makes pass 1
+    overflow, which exercises the at-scale fallback on the same log."""
+    import tenzir_spark.lake.table as table_mod
     states = []
-    for thresh in ("1000000", "0"):
-        monkeypatch.setenv("TENZIR_SPARK_DEDUP_BCAST_KEYS", thresh)
+    for thresh in (table_mod.DEDUP_BCAST_KEYS, 0):
+        monkeypatch.setattr(table_mod, "DEDUP_BCAST_KEYS", thresh)
         root = str(tmp_path_factory.mktemp(f"lake_b{thresh}") / "pages")
         table = LakeTable.create(spark, root, pages_schema(), "url",
                                  num_buckets=8, write_mode="mor")
@@ -301,3 +302,73 @@ def test_dedup_bcast_and_fallback_paths_identical(spark, change_log,
                               for k, v in d.items()}
         states.append(rows)
     assert states[0] == states[1]
+
+
+def test_mor_apply_jobs_carry_callers_job_group(spark, change_log,
+                                                tmp_path_factory):
+    """A MoR apply launches every Spark job from the caller's thread, so
+    each job carries the caller's job group (and a cancel of that group
+    reaches the whole apply)."""
+    import time
+    import uuid
+
+    log_dir = str(tmp_path_factory.mktemp("cdclog_jg") / "log")
+    (change_log.filter(F.col("epoch") < 4).write.mode("overwrite")
+     .partitionBy("epoch").parquet(log_dir))
+    plog = spark.read.parquet(log_dir)
+    root = str(tmp_path_factory.mktemp("lake_jg") / "pages")
+    table = LakeTable.create(spark, root, pages_schema(), "url",
+                             num_buckets=8, write_mode="mor")
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def grouped_job(tag: str) -> int:
+        # the status store fills from the listener bus, which delivers
+        # events in order: once this job shows, every earlier one has
+        sc.setJobGroup(tag, tag)
+        spark.range(1).collect()
+        for _ in range(200):
+            ids = tracker.getJobIdsForGroup(tag)
+            if ids:
+                return ids[0]
+            time.sleep(0.05)
+        raise AssertionError(f"job of group {tag} never reached the tracker")
+
+    run_id = uuid.uuid4().hex
+    try:
+        first = grouped_job(f"before-{run_id}")
+        ungrouped = set(tracker.getJobIdsForGroup(None))
+        sc.setJobGroup(f"apply-{run_id}", "cdc apply")
+        CdcEngine(spark, table, n_salts=4).run(plog)
+        last = grouped_job(f"after-{run_id}")
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description",
+                     "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+    assert len(table.snapshot.ledger) == 4
+    assert set(tracker.getJobIdsForGroup(None)) <= ungrouped
+    jobs = sorted(tracker.getJobIdsForGroup(f"apply-{run_id}"))
+    assert jobs and jobs == list(range(first + 1, last))
+
+
+def test_apply_path_reads_no_environment():
+    """The CDC apply path has no environment knobs: its plan choices
+    come from the data (row counts, key counts) and from explicit
+    arguments only."""
+    import ast
+    import pathlib
+
+    import tenzir_spark.cdc.engine as eng_mod
+    import tenzir_spark.lake.table as table_mod
+
+    env_names = {"environ", "environb", "getenv", "getenvb"}
+    for mod in (eng_mod, table_mod):
+        tree = ast.parse(pathlib.Path(mod.__file__).read_text())
+        reads = []
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Attribute) and node.attr in env_names:
+                reads.append(node.lineno)
+            elif (isinstance(node, ast.ImportFrom) and node.module == "os"
+                  and any(a.name in env_names for a in node.names)):
+                reads.append(node.lineno)
+        assert not reads, f"{mod.__name__} reads the environment at {reads}"

@@ -37,7 +37,7 @@ CDC_FOOTER = """
 ## cdc broadcast two-pass dedup (engine path, `lake/table.py _prepare_mor`)
 
 Not a board query — the plan `_prepare_mor` builds when the batch's
-estimated key count fits a broadcast (r5; the at-scale struct-`max_by`
+row bound fits a broadcast (r5; the at-scale struct-`max_by`
 fallback is audited above as `dedup_max_lsn`). Verified shape at
 local[4], 50k-event batch:
 
