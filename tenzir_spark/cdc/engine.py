@@ -224,11 +224,17 @@ class CdcEngine:
         shape -> prepare (scan, dedup, delta write) -> commit, so every
         Spark job carries the caller's job group and description, and a
         cancel of that group stops the apply. The batch's summed row
-        count is the one gate of the dedup plan: it bounds the batch's
-        distinct keys, and _prepare_mor attempts the broadcast two-pass
-        only under that bound. On a failure nothing from that batch on
-        commits and a rerun resumes from the ledger. CoW applies epoch by
-        epoch, since epoch N+1's merge reads the state epoch N wrote.
+        count is the one gate of the dedup plan, and it bounds the
+        batch's distinct keys. A batch of at most one table slice
+        (65,536 rows: a live-tail micro-batch) dedups with struct max_by
+        inside the delta write's job, so it costs discovery plus one
+        apply job; a larger one takes the broadcast two-pass, whose four
+        extra jobs pay for themselves on large batches; a pass 1
+        that overflows the broadcast key cap falls back to struct max_by
+        (_prepare_mor). On a failure nothing from that batch on commits
+        and a rerun resumes from the ledger. CoW applies epoch by epoch,
+        since epoch N+1's merge reads the state epoch N wrote. A frame
+        with no rows discovers no epochs and commits nothing.
         """
         rows = _epoch_rows_from_footers(change_log)
         if rows is not None:
@@ -366,8 +372,7 @@ class CdcEngine:
         stream = spark.readStream.schema(schema).parquet(log_dir)
 
         def apply_batch(batch_df, batch_id):
-            if not batch_df.head(1):
-                return
+            # an empty micro-batch discovers no epochs and commits nothing
             self.table.refresh()
             self.run(batch_df, max_coalesce=max_coalesce)
 

@@ -38,9 +38,12 @@ _WIDEN_OK = {
 }
 
 
-# broadcast two-pass dedup limits (LakeTable._prepare_mor): a batch of at
-# most EXACT_MAX_ROWS rows attempts pass 1, whose (key, max lsn) set is
-# broadcast while it holds at most DEDUP_BCAST_KEYS keys (~64 MB)
+# dedup plan bounds (LakeTable._prepare_mor): a batch of more than
+# TABLE_SLICE_ROWS and at most EXACT_MAX_ROWS rows attempts the broadcast
+# two-pass, whose pass-1 (key, max lsn) set is broadcast while it holds
+# at most DEDUP_BCAST_KEYS keys (~64 MB); a batch of at most one table
+# slice (the reference's import unit, defaults.hpp:34) takes struct max_by
+TABLE_SLICE_ROWS = 65_536
 DEDUP_BCAST_KEYS = 1_000_000
 EXACT_MAX_ROWS = 512_000_000
 
@@ -429,38 +432,48 @@ class LakeTable:
         """Merge-on-read apply: the epoch's heavy shuffle carries only
         per-partition dedup SURVIVORS, never raw duplicates.
 
-        With ``pre_deduplicated=False`` the max-lsn dedup picks one of
-        two plans. The one gate is ``batch_rows``, the batch's exact row
-        count from CdcEngine.run's discovery — an upper bound on its
-        distinct keys:
+        With ``pre_deduplicated=False`` the max-lsn dedup takes one of
+        three routes over two plans. The one gate is ``batch_rows``, the
+        batch's exact row count from CdcEngine.run's discovery (parquet
+        footers or the discovery scan) — an upper bound on its distinct
+        keys:
 
-        * **broadcast two-pass** (0 < batch_rows <= EXACT_MAX_ROWS):
-          pass 1 aggregates max(lsn) per key — a FIXED-WIDTH agg buffer
-          that updates in place, ~4x cheaper per row than copying a
-          payload struct — capped at DEDUP_BCAST_KEYS+1 rows and EAGERLY
-          localCheckpointed, so the exact key count is read off the
-          materialized frame and the broadcast build never recomputes
-          the aggregate. Pass 2 re-scans the batch with a broadcast
-          left-semi join on (key, lsn), keeping survivors with their
-          payload pipelined straight into the bucket repartition. Before
-          the join, rows with ``lsn < min over keys of max(lsn)`` are
-          dropped — an always-correct superset filter (every survivor's
-          lsn is its key's max, hence >= the smallest such max) that
-          reaches the parquet scan as a pushed predicate: on an
-          lsn-ordered log (any WAL) it prunes whole row groups — 94.7%
-          of the bench log's rows never decode (64M -> 3.4M). No
-          payload-carrying shuffle AT ALL: the only exchange is the tiny
-          pass-1 agg. Requires lsn to be unique per key within the batch
-          (a WAL position — the log contract).
+        * **struct max_by, one slice** (batch_rows <= TABLE_SLICE_ROWS =
+          65,536, the reference's table-slice size and the Arrow batch
+          size of get_spark): groupBy(__bucket, key) with a map-side
+          partial aggregate, so hot keys (Zipf domains) collapse to one
+          row per input partition BEFORE the exchange — the north rule's
+          skew defense for free — and only survivors shuffle. It runs
+          inside the delta write's job, so a live-tail micro-batch pays
+          no extra Spark job for its dedup. The two-pass would add four
+          (pass-1 aggregate, eager checkpoint, stats collect, broadcast
+          build); on the bench log it measured slower up to 64k rows,
+          level at 100k and faster from 1M rows on (CHANGES.md has the
+          sweep).
+        * **broadcast two-pass** (TABLE_SLICE_ROWS < batch_rows <=
+          EXACT_MAX_ROWS): pass 1 aggregates max(lsn) per key — a
+          FIXED-WIDTH agg buffer that updates in place, ~4x cheaper per
+          row than copying a payload struct — capped at
+          DEDUP_BCAST_KEYS+1 rows and EAGERLY localCheckpointed, so the
+          exact key count is read off the materialized frame and the
+          broadcast build never recomputes the aggregate. Pass 2
+          re-scans the batch with a broadcast left-semi join on (key,
+          lsn), keeping survivors with their payload pipelined straight
+          into the bucket repartition. Before the join, rows with ``lsn
+          < min over keys of max(lsn)`` are dropped — an always-correct
+          superset filter (every survivor's lsn is its key's max, hence
+          >= the smallest such max) that reaches the parquet scan as a
+          pushed predicate: on an lsn-ordered log (any WAL) it prunes
+          whole row groups — 94.7% of the bench log's rows never decode
+          (64M -> 3.4M). No payload-carrying shuffle AT ALL: the only
+          exchange is the tiny pass-1 agg. Requires lsn to be unique per
+          key within the batch (a WAL position — the log contract).
         * **struct max_by fallback** (no row count — a single-epoch
           merge() — or pass 1 overflows DEDUP_BCAST_KEYS, the
           10^10-scale regime where a batch touches hundreds of millions
-          of urls): groupBy(__bucket, key) with a map-side partial
-          aggregate, so hot keys (Zipf domains) collapse to one row per
-          input partition BEFORE the exchange — the north rule's skew
-          defense for free — and only survivors shuffle.
+          of urls): the same plan as the one-slice route.
 
-        Both paths end with an EXPLICIT nb-partition repartition by
+        Both plans end with an EXPLICIT nb-partition repartition by
         bucket, which AQE respects, so the post-dedup text UDF and the
         parquet write spread over ~nb tasks instead of the single task
         AQE's advisory-size coalescing collapses a small survivor set
@@ -485,7 +498,8 @@ class LakeTable:
         clustered = False
         if not pre_deduplicated:
             mx = None
-            if batch_rows is not None and 0 < batch_rows <= EXACT_MAX_ROWS:
+            if (batch_rows is not None
+                    and TABLE_SLICE_ROWS < batch_rows <= EXACT_MAX_ROWS):
                 mx = (delta.groupBy(key)
                       .agg(F.max("__lsn").alias("__mx"))
                       .limit(DEDUP_BCAST_KEYS + 1)

@@ -283,25 +283,56 @@ def test_footer_and_scan_discovery_identical(spark, change_log,
 def test_dedup_bcast_and_fallback_paths_identical(spark, change_log,
                                                   tmp_path_factory,
                                                   monkeypatch):
-    """_prepare_mor's two dedup plans (broadcast two-pass vs struct
-    max_by fallback) must leave byte-identical final state. The batch's
-    row bound picks broadcast here; a key cap of 0 makes pass 1
-    overflow, which exercises the at-scale fallback on the same log."""
+    """_prepare_mor's three dedup routes must leave byte-identical final
+    state on the same log: the batch fits one table slice, so as is it
+    takes struct max_by; a slice bound of 0 sends it to the broadcast
+    two-pass; a slice bound of 0 plus a key cap of 0 makes pass 1
+    overflow into the at-scale struct max_by fallback."""
     import tenzir_spark.lake.table as table_mod
+    assert N_EVENTS <= table_mod.TABLE_SLICE_ROWS
+    pass1 = []
+    frame_cls = type(change_log)
+    checkpoint = frame_cls.localCheckpoint
+
+    def counting_checkpoint(self, *args, **kwargs):
+        pass1.append(1)
+        return checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(frame_cls, "localCheckpoint", counting_checkpoint)
     states = []
-    for thresh in (table_mod.DEDUP_BCAST_KEYS, 0):
-        monkeypatch.setattr(table_mod, "DEDUP_BCAST_KEYS", thresh)
-        root = str(tmp_path_factory.mktemp(f"lake_b{thresh}") / "pages")
+    for slice_rows, keys in ((table_mod.TABLE_SLICE_ROWS,
+                              table_mod.DEDUP_BCAST_KEYS),
+                             (0, table_mod.DEDUP_BCAST_KEYS), (0, 0)):
+        monkeypatch.setattr(table_mod, "TABLE_SLICE_ROWS", slice_rows)
+        monkeypatch.setattr(table_mod, "DEDUP_BCAST_KEYS", keys)
+        pass1.clear()
+        root = str(tmp_path_factory.mktemp(f"lake_b{slice_rows}_{keys}")
+                   / "pages")
         table = LakeTable.create(spark, root, pages_schema(), "url",
                                  num_buckets=8, write_mode="mor")
         CdcEngine(spark, table, n_salts=4).run(change_log)
+        # only the two-pass routes run (and checkpoint) a pass 1
+        assert bool(pass1) == (slice_rows == 0)
         rows = {}
         for r in table.read().collect():
             d = r.asDict()
             rows[d["url"]] = {k: (bytes(v) if isinstance(v, bytearray) else v)
                               for k, v in d.items()}
         states.append(rows)
-    assert states[0] == states[1]
+    assert states[0] and states[0] == states[1] == states[2]
+
+
+def test_run_over_empty_log_commits_nothing(spark, change_log,
+                                            tmp_path_factory):
+    """An empty frame (what a live tail's idle micro-batch hands run())
+    discovers no epochs: no ledger entry, no new snapshot."""
+    root = str(tmp_path_factory.mktemp("lake_empty") / "pages")
+    table = LakeTable.create(spark, root, pages_schema(), "url",
+                             num_buckets=8, write_mode="mor")
+    version = table.snapshot.version
+    assert CdcEngine(spark, table, n_salts=4).run(change_log.limit(0)) == []
+    assert table.refresh().snapshot.version == version
+    assert not table.snapshot.ledger
 
 
 def test_mor_apply_jobs_carry_callers_job_group(spark, change_log,

@@ -1,0 +1,93 @@
+"""session.py's zipimporter backport: ``importlib.invalidate_caches()``
+drops each zip archive's cached directory instead of re-reading it, and
+a module added to an archive afterwards still imports."""
+
+from __future__ import annotations
+
+import importlib
+import sys
+import uuid
+import zipfile
+import zipimport
+
+import pandas as pd
+import pytest
+from pyspark.sql import functions as F
+
+import tenzir_spark.session  # noqa: F401  (installs the backport)
+
+pytestmark = pytest.mark.skipif(
+    sys.version_info >= (3, 13),
+    reason="zipimport defers directory reads itself from Python 3.13 on")
+
+
+@pytest.fixture
+def zip_on_path(tmp_path, monkeypatch):
+    archive = str(tmp_path / "mods.zip")
+    name = f"zipmod_{uuid.uuid4().hex}"
+    with zipfile.ZipFile(archive, "w") as zf:
+        zf.writestr(f"{name}.py", "VALUE = 1\n")
+    monkeypatch.syspath_prepend(archive)
+    yield archive, name
+    for mod in [m for m in sys.modules if m.startswith(name)]:
+        del sys.modules[mod]
+    sys.path_importer_cache.pop(archive, None)
+    zipimport._zip_directory_cache.pop(archive, None)
+
+
+def test_invalidate_caches_reads_no_zip_directory(zip_on_path, monkeypatch):
+    archive, name = zip_on_path
+    assert importlib.import_module(name).VALUE == 1
+    assert isinstance(sys.path_importer_cache[archive], zipimport.zipimporter)
+    importlib.invalidate_caches()
+    reads = []
+    read = zipimport._read_directory
+
+    def counting_read(path):
+        reads.append(path)
+        return read(path)
+
+    monkeypatch.setattr(zipimport, "_read_directory", counting_read)
+    importlib.invalidate_caches()
+    assert reads == []
+
+
+def test_module_added_to_zip_imports_after_invalidate(zip_on_path):
+    archive, name = zip_on_path
+    assert importlib.import_module(name).VALUE == 1
+    with zipfile.ZipFile(archive, "a") as zf:
+        zf.writestr(f"{name}_late.py", "VALUE = 2\n")
+    importlib.invalidate_caches()
+    assert importlib.import_module(f"{name}_late").VALUE == 2
+    assert importlib.reload(sys.modules[name]).VALUE == 1
+
+
+def test_spark_worker_skips_zip_rescan(spark):
+    """A pandas UDF evaluated after the engine's text UDF, in the same
+    Python worker, finds the worker's zip importers no longer re-read
+    their archives when PySpark invalidates the import caches at task
+    start."""
+    from tenzir_spark.cdc.extract import extract_text_udf
+
+    @F.pandas_udf("array<long>")
+    def zip_rescans(text: pd.Series) -> pd.Series:
+        import importlib
+        import sys
+        import zipimport
+        importers = sum(isinstance(f, zipimport.zipimporter)
+                        for f in sys.path_importer_cache.values())
+        reads = []
+        read = zipimport._read_directory
+        zipimport._read_directory = lambda path: reads.append(path) or read(path)
+        try:
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = read
+        return pd.Series([[importers, len(reads)]] * len(text))
+
+    df = spark.createDataFrame([(b"<p>a &amp; b</p>",)], "html binary")
+    (row,) = df.select(zip_rescans(extract_text_udf(F.col("html")))
+                       .alias("r")).collect()
+    importers, reads = row.r
+    assert importers > 0
+    assert reads == 0

@@ -36,19 +36,28 @@ AUDIT = ["where_select", "summarize", "sort", "join_agg", "tpch_q6",
 CDC_FOOTER = """
 ## cdc broadcast two-pass dedup (engine path, `lake/table.py _prepare_mor`)
 
-Not a board query — the plan `_prepare_mor` builds when the batch's
-row bound fits a broadcast (r5; the at-scale struct-`max_by`
-fallback is audited above as `dedup_max_lsn`). Verified shape at
-local[4], 50k-event batch:
+Not a board query — the plan `_prepare_mor` builds when the batch
+holds more than one table slice (65,536 rows) and its row bound fits a
+broadcast (r5; a batch of at most one slice and the at-scale fallback
+both take struct `max_by`, audited above as `dedup_max_lsn`). Verified
+shape at local[4], 16 buckets, 100k-event batch (4 epochs):
 
 ```
-BroadcastHashJoin LeftSemi BuildRight
-+- scan (payload columns)                 <- pass 2: full rows, NO shuffle
-+- BroadcastExchange
-   +- HashAggregate(final max(__lsn))
-      +- Exchange (key)                    <- only exchange of the agg
-         +- HashAggregate(partial max)     <- map-side combine, (key,lsn) only
-... Exchange hashpartitioning(__b, nb)     <- survivors only, bucket write
+pass 1 (eager localCheckpoint):
+CollectLimit DEDUP_BCAST_KEYS+1
++- HashAggregate(final max(__lsn))
+   +- Exchange hashpartitioning(key)      <- only exchange of the agg
+      +- HashAggregate(partial max)       <- map-side combine, (key,lsn) only
+         +- scan (key, lsn, op)
+
+pass 2 (the delta write):
+ArrowEvalPython extract_text_udf
++- Exchange hashpartitioning(__b, nb)     <- survivors only, bucket write
+   +- BroadcastHashJoin LeftSemi BuildRight
+      :- Filter lsn >= min(max lsn)       <- pushed to the parquet scan
+      :  +- scan (payload columns)        <- full rows, NO shuffle
+      +- BroadcastExchange
+         +- Scan ExistingRDD[key, __mx]   <- the checkpointed pass 1
 ```
 
 - 2 exchanges total: the narrow (key,lsn) aggregate and the final
@@ -56,8 +65,9 @@ BroadcastHashJoin LeftSemi BuildRight
   writer without ever hash-shuffling — the max_by fallback's
   survivors-only exchange is already gone here.
 - `BroadcastHashJoin LeftSemi BuildRight`: the (key, max_lsn) set
-  builds once per executor; semantics pinned byte-identical to the
-  fallback by `test_dedup_bcast_and_fallback_paths_identical`.
+  builds once per executor off the checkpoint, never re-running the
+  aggregate; semantics pinned byte-identical to both struct `max_by`
+  routes by `test_dedup_bcast_and_fallback_paths_identical`.
 - The partial `HashAggregate` before the agg exchange is the Zipf
   hot-key defense: each input partition reduces a hot domain's rows to
   one (key, max) pair pre-shuffle.
