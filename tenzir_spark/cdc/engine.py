@@ -1,12 +1,15 @@
-"""CDC apply engine: ordered epoch tail -> schema evolution -> salted
-max-lsn dedup -> MERGE -> exactly-once commit + lineage.
+"""CDC apply engine: ordered epoch tail -> schema evolution -> max-lsn
+dedup -> MERGE -> exactly-once commit + lineage.
 
 This is the north rule's pipeline, the Spark reinterpretation of the
 reference's import path (libtenzir/builtins/operators/import.cpp:70 ->
 importer.cpp:43-76 -> index.cpp:650-670 active partitions): where Tenzir
 stamps import_time and routes slices to per-schema partitions, we stamp
 lineage and MERGE keyed batches into per-bucket files under an idempotent
-epoch ledger.
+epoch ledger. Like the reference there is one import path whatever the
+storage layout: every batch goes through LakeTable._prepare_mor and
+LakeTable.merge_commit_batch, and the table's write mode only decides
+how the survivors are committed.
 """
 
 from __future__ import annotations
@@ -56,31 +59,6 @@ def _epoch_rows_from_footers(change_log: DataFrame) -> dict[int, int] | None:
         return None
 
 
-def salted_deduplicate(df: DataFrame, key: str, lsn_col: str, n_salts: int = 16) -> DataFrame:
-    """Two-phase max-lsn dedup with an explicit salt.
-
-    Phase 1 reduces (key, salt) groups — a hot key's rows spread over
-    ``n_salts`` reducers instead of one; phase 2 reduces the <=n_salts
-    survivors per key. Both phases are hash aggregates with map-side
-    partial aggregation, so even phase 2 never shuffles more than
-    (distinct keys x n_salts) rows. This is the north rule's
-    "salted-repartition to defuse hot-domain skew" expressed as
-    aggregation (cheaper than repartition+window: no sort, no full row
-    shuffle of duplicates).
-    """
-    others = [c for c in df.columns if c != key]
-    salt = F.pmod(F.xxhash64(F.col(lsn_col)), F.lit(n_salts)).cast("int")
-    stage1 = (
-        df.groupBy(F.col(key), salt.alias("__salt"))
-        .agg(F.max_by(F.struct(*[F.col(c) for c in others]), F.col(lsn_col)).alias("__r"))
-    )
-    stage2 = (
-        stage1.groupBy(key)
-        .agg(F.max_by(F.col("__r"), F.col(f"__r.{lsn_col}")).alias("__r"))
-    )
-    return stage2.select(key, *[F.col(f"__r.{c}").alias(c) for c in others])
-
-
 def descriptor_to_alter(desc: str) -> dict:
     """Avro-style JSON change-stream descriptor -> lake ALTER op.
 
@@ -105,50 +83,12 @@ class CdcEngine:
     """Applies an ordered (lsn, op, payload) change log to a LakeTable
     epoch by epoch, exactly once."""
 
-    def __init__(self, spark: SparkSession, table: LakeTable, n_salts: int = 16):
+    def __init__(self, spark: SparkSession, table: LakeTable,
+                 n_salts: int | None = None):
+        """``n_salts`` is unused. It is still accepted because the frozen
+        ``bench.py`` passes it; no other caller should."""
         self.spark = spark
         self.table = table
-        self.n_salts = n_salts
-
-    def apply_epoch(self, change_log: DataFrame, epoch: int,
-                    descriptors: list[str] | None = None) -> dict:
-        """``descriptors``: this epoch's schema-change directives, if the
-        caller already fetched them (run() prefetches ALL epochs'
-        descriptors in one job); None -> collect them here."""
-        ek = str(epoch)
-        self.table.refresh()
-        if ek in self.table.snapshot.ledger:
-            return {**self.table.snapshot.ledger[ek], "skipped": True}
-
-        batch = change_log.filter(F.col("epoch") == epoch)
-
-        # 1. schema evolution, transactionally BEFORE the merge (north rule)
-        if descriptors is None:
-            descriptors = [
-                r[0] for r in batch.filter(F.col("op") == "schema")
-                .select("schema_descriptor").collect()
-            ]
-        alters = [descriptor_to_alter(d) for d in descriptors if d]
-        if alters:
-            self.table.alter(alters)
-
-        # 2. shape data rows to the (evolved) table schema
-        shaped, post = self._shape(batch)
-
-        if self.table.mode == "mor":
-            # 3+4 fused: the lake clusters by bucket and dedups per
-            # partition in one shuffle (see LakeTable._merge_mor); the
-            # text UDF runs post-dedup inside the same stage.
-            return self.table.merge(shaped, epoch, pre_deduplicated=False,
-                                    post_dedup=post)
-
-        # CoW: 3. max-lsn dedup per key, salted against hot-domain skew
-        key = self.table.snapshot.key_col
-        deduped = salted_deduplicate(shaped, key, "lsn", self.n_salts)
-        if post is not None:
-            deduped = post(deduped)
-        # 4. MERGE under the idempotent ledger
-        return self.table.merge(deduped, epoch)
 
     def _shape(self, batch: DataFrame,
                added_gate: dict[str, int] | None = None):
@@ -203,15 +143,14 @@ class CdcEngine:
         non-schema rows). An explicit ``epochs`` list applies just those
         epochs off the same discovery.
 
-        MoR mode COALESCES a backlog: runs of up to ``max_coalesce``
+        A backlog COALESCES: runs of up to ``max_coalesce``
         consecutive pending epochs with no rename between them apply as
         ONE job — union the epochs, max-lsn dedup across the whole
-        range, one delta write, one atomic commit that ledgers every
+        range, one survivor write, one atomic commit that ledgers every
         constituent epoch (merge_commit_batch). This is semantically
         transparent: lsn is globally monotone, so the per-key max-lsn
         survivor of the union is exactly the row sequential application
-        would leave visible, and the MoR read path merges deltas by max
-        lsn anyway. What it buys is amortization of the per-epoch fixed
+        would leave visible. What it buys is amortization of the per-epoch fixed
         cost that dominates small epochs — the Spark job itself
         (scheduling, python workers, one parquet open/close per bucket)
         against a commit+checkpoint of ~5 ms. ``max_coalesce=1`` is the
@@ -221,20 +160,22 @@ class CdcEngine:
         Streaming micro-batch trigger does.
 
         Batches run in epoch order on the caller's thread: alter ->
-        shape -> prepare (scan, dedup, delta write) -> commit, so every
+        shape -> prepare (scan, dedup, survivor write) -> commit, so every
         Spark job carries the caller's job group and description, and a
         cancel of that group stops the apply. The batch's summed row
         count is the one gate of the dedup plan, and it bounds the
         batch's distinct keys. A batch of at most one table slice
         (65,536 rows: a live-tail micro-batch) dedups with struct max_by
-        inside the delta write's job, so it costs discovery plus one
+        inside the survivor write's job, so it costs discovery plus one
         apply job; a larger one takes the broadcast two-pass, whose four
         extra jobs pay for themselves on large batches; a pass 1
         that overflows the broadcast key cap falls back to struct max_by
         (_prepare_mor). On a failure nothing from that batch on commits
-        and a rerun resumes from the ledger. CoW applies epoch by epoch,
-        since epoch N+1's merge reads the state epoch N wrote. A frame
-        with no rows discovers no epochs and commits nothing.
+        and a rerun resumes from the ledger. Both write modes take this
+        path: a CoW table folds each batch's survivors into the base rows
+        of the buckets they touch in the batch's one commit (see
+        LakeTable.merge_commit_batch). A frame with no rows discovers no
+        epochs and commits nothing.
         """
         rows = _epoch_rows_from_footers(change_log)
         if rows is not None:
@@ -252,9 +193,6 @@ class CdcEngine:
             desc = {r["epoch"]: [d for d in r["ds"] if d] for r in found}
         if epochs is None:
             epochs = sorted(rows)
-        if self.table.mode != "mor":
-            return [self.apply_epoch(change_log, e, descriptors=desc.get(e, []))
-                    for e in epochs]
         return self._run_batched(change_log, epochs, desc, rows,
                                  max(max_coalesce, 1))
 
@@ -325,7 +263,7 @@ class CdcEngine:
                 added_gate=added)
             # an epoch the discovery did not see has no rows in the log
             new_files, entry = self.table._prepare_mor(
-                shaped, "op", "lsn", False, post,
+                shaped, "op", "lsn", post,
                 batch_rows=sum(rows.get(e, 0) for e in batch))
             got = self.table.merge_commit_batch(
                 [str(e) for e in batch], new_files, entry)
@@ -342,11 +280,11 @@ class CdcEngine:
         epoch-partitioned change log, applied per micro-batch through
         the same run() path (coalescing + ledger).
 
-        Sibling: ``streaming.stream_cdc_apply`` tails an EPOCH-LESS
-        stream and ledgers by Spark micro-batch id; this method is for
-        logs that carry their own epoch column — the ledger keys stay
-        the log's epochs, so a resume (or a plain batch run()) remains
-        interchangeable with the stream.
+        ``streaming.stream_cdc_apply`` also ends in run(), for an
+        EPOCH-LESS stream: it stamps each micro-batch's id as its epoch.
+        This method is for logs that carry their own epoch column — the
+        ledger keys stay the log's epochs, so a resume (or a plain batch
+        run()) remains interchangeable with the stream.
 
         Exactly-once composes from two layers: Spark's streaming
         checkpoint makes foreachBatch at-least-once over file arrivals,
@@ -373,7 +311,6 @@ class CdcEngine:
 
         def apply_batch(batch_df, batch_id):
             # an empty micro-batch discovers no epochs and commits nothing
-            self.table.refresh()
             self.run(batch_df, max_coalesce=max_coalesce)
 
         writer = (stream.writeStream

@@ -30,12 +30,10 @@ from __future__ import annotations
 
 import json
 import os
-import time
 import uuid
 from dataclasses import dataclass, field
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -279,10 +277,3 @@ def bucket_expr(key_col: str, num_buckets: int):
     keys route to the same bucket."""
     return F.pmod(F.xxhash64(F.col(key_col)), F.lit(num_buckets)).cast("int")
 
-
-def collect_stats(df: DataFrame, stat_cols: list[str]) -> DataFrame:
-    """Per-bucket min/max/null stats in one aggregate pass (JVM-side)."""
-    aggs = [F.count(F.lit(1)).alias("__rows")]
-    for c in stat_cols:
-        aggs += [F.min(c).alias(f"__min_{c}"), F.max(c).alias(f"__max_{c}")]
-    return df.groupBy("__bucket").agg(*aggs)

@@ -1,5 +1,8 @@
-"""LakeTable — bucketed copy-on-write table with MERGE, schema evolution,
-and an exactly-once epoch ledger. See format.py for the on-disk layout.
+"""LakeTable — bucketed table with MERGE, schema evolution, and an
+exactly-once epoch ledger. See format.py for the on-disk layout.
+
+Both write modes share one apply path (_prepare_mor); the write mode is
+only the commit policy of merge_commit_batch.
 """
 
 from __future__ import annotations
@@ -67,12 +70,14 @@ class LakeTable:
     def create(cls, spark: SparkSession, root: str, schema: T.StructType,
                key_col: str, num_buckets: int = 16,
                write_mode: str = "cow", io: LocalFileIO | None = None) -> "LakeTable":
-        """``write_mode``:
+        """``write_mode``, the commit policy of a merge:
 
-        - ``cow`` (copy-on-write): merge rewrites touched buckets; reads
-          are plain scans. Best for read-heavy tables / low change rates.
-        - ``mor`` (merge-on-read): merge appends per-bucket DELTA files
-          (no target read, no join — pure bucketed append), readers
+        - ``cow`` (copy-on-write): the commit folds the survivors into the
+          base rows of the buckets they touch and rewrites those buckets
+          (a change wins over the stored row whatever its lsn); reads are
+          plain scans. Best for read-heavy tables / low change rates.
+        - ``mor`` (merge-on-read): the commit appends the survivor files
+          as per-bucket DELTA files (no target read, no join), readers
           resolve max-lsn per key at scan time, compaction folds deltas
           into base files. The correct mode for high-rate CDC at 10^10
           events — write amplification drops from O(table) to O(batch)
@@ -138,8 +143,8 @@ class LakeTable:
                 cols.append(F.col(fld.name).cast(fld.dataType).alias(fld.name))
             else:
                 cols.append(F.lit(None).cast(fld.dataType).alias(fld.name))
-        if self.mode == "mor":
-            # MoR internals (resolution metadata)
+        if self.mode == "mor" or "__op" in df.columns:
+            # MoR internals (resolution metadata), also in survivor files
             cols.append((F.col("__lsn") if "__lsn" in df.columns
                          else F.lit(-1).cast("long")).alias("__lsn"))
             cols.append((F.col("__op") if "__op" in df.columns
@@ -181,6 +186,18 @@ class LakeTable:
             if self.mode == "mor" and not resolve:
                 cols += [F.lit(-1).cast("long").alias("__lsn"), F.lit("upsert").alias("__op")]
             return self.spark.range(0).select(*cols)
+        out = self._scan(files)
+        if self.mode == "mor" and resolve:
+            if any(f.kind == "delta" for f in files):
+                out = self._resolve(out)
+            else:
+                # fully compacted: base files hold one live row per key
+                out = out.filter(F.col("__op") != "delete").drop("__lsn", "__op")
+        return out
+
+    def _scan(self, files: list[DataFile]) -> DataFrame:
+        """The rows of ``files`` under the current schema: one parquet
+        scan per schema epoch, aligned (_align) and unioned by name."""
         by_epoch: dict[int, list[str]] = {}
         for f in files:
             by_epoch.setdefault(f.schema_epoch, []).append(self.io.join(self.root, f.path))
@@ -190,24 +207,28 @@ class LakeTable:
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
-        if self.mode == "mor" and resolve:
-            if any(f.kind == "delta" for f in files):
-                out = self._resolve(out)
-            else:
-                # fully compacted: base files hold one live row per key
-                out = out.filter(F.col("__op") != "delete").drop("__lsn", "__op")
         return out
 
     def _resolve(self, raw: DataFrame) -> DataFrame:
         """MoR read-time resolution: one row per key (max __lsn), deletes
-        dropped. Hash aggregate with partial (map-side) aggregation — the
-        skew-safe shape (see operators.deduplicate)."""
+        dropped."""
+        return (self._latest_per_key(raw)
+                .filter(F.col("__op") != "delete").drop("__lsn", "__op"))
+
+    def _latest_per_key(self, rows: DataFrame, order: str = "__lsn",
+                        by: tuple[str, ...] = ()) -> DataFrame:
+        """One row per key: the row with the greatest ``order``. Hash
+        aggregate with partial (map-side) aggregation — the skew-safe
+        shape (see operators.deduplicate). ``by`` adds grouping columns
+        that are functions of the key (the bucket). max_by skips a row
+        whose ordering is null, so every row must carry a non-null
+        ``order``: a null would not rank a row low, it would drop it."""
         key = self.snapshot.key_col
-        others = [c for c in raw.columns if c != key]
-        row = F.max_by(F.struct(*[F.col(c) for c in others]), F.col("__lsn"))
-        out = raw.groupBy(key).agg(row.alias("__r"))
-        out = out.select(key, *[F.col(f"__r.{c}").alias(c) for c in others])
-        return out.filter(F.col("__op") != "delete").drop("__lsn", "__op")
+        group = [*by, key]
+        others = [c for c in rows.columns if c not in group]
+        row = F.max_by(F.struct(*[F.col(c) for c in others]), F.col(order))
+        return (rows.groupBy(*group).agg(row.alias("__r"))
+                .select(*group, *[F.col(f"__r.{c}").alias(c) for c in others]))
 
     def row_count(self) -> int:
         return sum(f.rows for f in self.snapshot.files)
@@ -291,125 +312,44 @@ class LakeTable:
         if self.mode == "mor":
             df = df.withColumn("__lsn", F.lit(-1).cast("long")) \
                    .withColumn("__op", F.lit("upsert"))
-        self._commit_files(self._write_bucketed(df), replace_buckets=None, epoch=None,
-                           epoch_stats=None)
+        self._commit_files(self._write_bucketed(df), replace_buckets=None)
 
     def merge(self, changes: DataFrame, epoch: int | str,
-              op_col: str = "op", lsn_col: str = "lsn",
-              pre_deduplicated: bool = True,
-              post_dedup=None) -> dict:
-        """MERGE INTO under the exactly-once protocol.
+              op_col: str = "op", lsn_col: str = "lsn") -> dict:
+        """MERGE INTO under the exactly-once protocol: the CDC apply path
+        (_prepare_mor, then merge_commit_batch) for one epoch.
 
-        ``changes`` must hold one row per key (pre-deduplicated, e.g. by
-        operators.deduplicate max-lsn) with columns: key, ``op_col`` in
-        insert|update|delete|upsert, ``lsn_col``, plus the current table
-        payload columns. Copy-on-write at bucket granularity: only buckets
-        containing changed keys are rewritten; files of untouched buckets
-        carry over by reference.
+        ``changes`` has columns: key, ``op_col`` in
+        insert|update|delete|upsert, ``lsn_col``, plus any of the current
+        table payload columns (missing ones become typed nulls). It is
+        deduplicated to the max-lsn row per key first, so a batch with
+        several rows per key is fine. How the survivors are committed is
+        the table's write mode (see create()).
 
         Returns the ledger entry. If ``epoch`` is already in the ledger the
         call is a no-op (idempotent replay — the north rule's
         (checkpoint_epoch, partition_id) convergence quarantee comes from
         the ledger plus the atomic snapshot swap).
         """
-        key = self.snapshot.key_col
         ek = str(epoch)
         if ek in self.snapshot.ledger:
             return {**self.snapshot.ledger[ek], "skipped": True}
-
-        if self.mode == "mor":
-            return self._merge_mor(changes, ek, op_col, lsn_col,
-                                   pre_deduplicated, post_dedup)
-        if not pre_deduplicated:
-            from tenzir_spark.operators.limit import deduplicate as _dedup
-            changes = _dedup(changes, self.snapshot.key_col, lsn_col)
-        if post_dedup is not None:
-            changes = post_dedup(changes)
-
-        nb = self.snapshot.num_buckets
-        changes = changes.withColumn("__bucket", bucket_expr(key, nb))
-        # cache: the change set feeds (a) the stats collect and (b) the
-        # merge join — without this the dedup + UDF lineage runs twice
-        changes = changes.persist()
-        # one try owns the persist: the stats collect, the empty-epoch
-        # early return, and the merge loop all release it on every path
-        # (an exception in the collect or a `return` must not leak blocks)
-        try:
-            # small collect: epoch-level apply stats + touched bucket ids
-            agg = changes.groupBy().agg(
-                F.collect_set("__bucket").alias("buckets"),
-                F.count(F.lit(1)).alias("rows"),
-                F.max(lsn_col).alias("watermark"),
-            ).collect()[0]
-            touched = sorted(agg["buckets"] or [])
-            if not touched:
-                entry = {"rows_applied": 0, "lsn_watermark": None,
-                         "committed_at": time.time()}
-                self._commit_files([], replace_buckets=[], epoch=ek,
-                                   epoch_stats=entry)
-                return entry
-
-            payload_cols = [f.name for f in self.snapshot.schema.fields]
-            ch = changes.select(
-                F.col(key).alias("__k"),
-                F.col(op_col).alias("__op"),
-                *[F.col(c).alias(f"__c_{c}") for c in payload_cols if c != key],
-            )
-            entry = {"rows_applied": int(agg["rows"]),
-                     "lsn_watermark": int(agg["watermark"]) if agg["watermark"] is not None else None,
-                     "committed_at": time.time()}
-            for _ in range(5):
-                # the merge is computed against base's file set; commit
-                # validates those buckets are unchanged and we recompute
-                # against the refreshed table otherwise — no concurrent
-                # writer's files are ever silently dropped
-                base = self.snapshot
-                target = self.read(buckets=touched)
-                joined = target.join(ch, target[key] == ch["__k"], "full_outer")
-                is_change = F.col("__k").isNotNull()
-                is_delete = is_change & (F.col("__op") == "delete")
-                merged = joined.filter(~F.coalesce(is_delete, F.lit(False))).select(
-                    F.when(is_change, F.col("__k")).otherwise(F.col(key)).alias(key),
-                    *[
-                        F.when(is_change, F.col(f"__c_{c}")).otherwise(F.col(c)).alias(c)
-                        for c in payload_cols if c != key
-                    ],
-                )
-                new_files = self._write_bucketed(merged, only_buckets=touched)
-                try:
-                    self._commit_files(new_files, replace_buckets=touched, epoch=ek,
-                                       epoch_stats=entry, base_files=base.files)
-                    break
-                except ConcurrentMergeConflict:
-                    self.refresh()
-                    if ek in self.snapshot.ledger:
-                        return {**self.snapshot.ledger[ek], "skipped": True}
-            else:
-                raise ConcurrentMergeConflict(
-                    "exhausted merge recompute retries for epoch " + ek)
-        finally:
-            changes.unpersist()
-        self._write_checkpoints(ek, new_files, entry)
-        return entry
-
-    def _merge_mor(self, changes: DataFrame, ek: str, op_col: str, lsn_col: str,
-                   pre_deduplicated: bool = True, post_dedup=None) -> dict:
-        new_files, entry = self._prepare_mor(changes, op_col, lsn_col,
-                                             pre_deduplicated, post_dedup)
+        new_files, entry = self._prepare_mor(changes, op_col, lsn_col)
         return self.merge_commit_batch([ek], new_files, entry)[ek]
 
     def merge_commit_batch(self, eks: list[str], new_files: list[DataFile],
                            entry: dict) -> dict[str, dict]:
-        """Publish ONE prepared MoR delta that covers a contiguous run of
-        epochs (CdcEngine's backlog coalescing): every epoch key lands in
-        the ledger in the SAME atomic snapshot swap, so exactly-once
+        """Publish ONE prepared survivor set that covers a contiguous run
+        of epochs (CdcEngine's backlog coalescing): every epoch key lands
+        in the ledger in the SAME atomic snapshot swap, so exactly-once
         resume sees all-or-nothing — a replay of any constituent epoch
         short-circuits. Non-final epochs carry zero rows_applied and a
         ``coalesced_into`` pointer to the epoch whose entry owns the
         batch stats (the union's survivors aren't attributable per epoch
         after cross-epoch max-lsn dedup, and inventing a split would be
         fake lineage). The shared lsn_watermark is truthful: the batch
-        commits atomically, so table state reflects the full range."""
+        commits atomically, so table state reflects the full range. MoR
+        commits the survivor files as deltas; CoW folds them in."""
         ts = entry.get("committed_at", time.time())
         entries: dict[str, dict] = {}
         for ek in eks[:-1]:
@@ -421,22 +361,74 @@ class LakeTable:
         if len(eks) > 1:
             last["coalesced"] = len(eks)
         entries[eks[-1]] = last
-        self._commit_files(new_files, replace_buckets=None, epoch=None,
-                           epoch_stats=None, ledger_entries=entries)
+        if self.mode == "cow" and new_files:
+            self._fold_commit(new_files, entries)
+        else:
+            self._commit_files(new_files, replace_buckets=None,
+                               ledger_entries=entries)
         self._write_checkpoints(eks[-1], new_files, last)
         return entries
 
-    def _prepare_mor(self, changes: DataFrame, op_col: str, lsn_col: str,
-                     pre_deduplicated: bool = True, post_dedup=None,
-                     batch_rows: int | None = None) -> tuple[list[DataFile], dict]:
-        """Merge-on-read apply: the epoch's heavy shuffle carries only
-        per-partition dedup SURVIVORS, never raw duplicates.
+    def _fold_commit(self, survivors: list[DataFile],
+                     entries: dict[str, dict]) -> None:
+        """Copy-on-write commit: fold the survivors into the base rows of
+        the buckets they touch and replace those buckets, with every
+        ledger entry, in one snapshot. Base rows rank below every change,
+        so a change wins whatever its lsn; base files carry no
+        __lsn/__op. If a concurrent writer replaced a touched bucket
+        since, the fold recomputes against the refreshed table. The
+        survivor files are never referenced, so their commit dir goes."""
+        touched = sorted({f.bucket for f in survivors})
+        key = self.snapshot.key_col
+        nb = self.snapshot.num_buckets
+        try:
+            for _ in range(5):
+                base = self.snapshot
+                live = (self.read(buckets=touched)
+                        .withColumn("__op", F.lit("upsert"))
+                        .withColumn("__rank", F.lit(0)))
+                changes = (self._scan(survivors).drop("__lsn")
+                           .withColumn("__rank", F.lit(1)))
+                # a key has a base row and a survivor at most, so partial
+                # aggregation saves nothing: one shuffle by bucket serves
+                # both the resolve and the clustered write
+                rows = (live.unionByName(changes)
+                        .withColumn("__b", bucket_expr(key, nb))
+                        .repartition(nb, F.col("__b")))
+                merged = (self._latest_per_key(rows, "__rank", by=("__b",))
+                          .filter(F.col("__op") != "delete")
+                          .drop("__op", "__rank"))
+                new_files = self._write_bucketed(merged, clustered=True)
+                try:
+                    self._commit_files(new_files, replace_buckets=touched,
+                                       base_files=base.files,
+                                       ledger_entries=entries)
+                    return
+                except ConcurrentMergeConflict:
+                    self.refresh()
+                    if all(k in self.snapshot.ledger for k in entries):
+                        return
+            raise ConcurrentMergeConflict(
+                "exhausted merge recompute retries for epochs "
+                + ",".join(entries))
+        finally:
+            commit = next(p for p in survivors[0].path.split("/")
+                          if p.startswith("commit-"))
+            self.io.delete_dir(self.io.join(self.root, DATA_DIR, commit))
 
-        With ``pre_deduplicated=False`` the max-lsn dedup takes one of
-        three routes over two plans. The one gate is ``batch_rows``, the
-        batch's exact row count from CdcEngine.run's discovery (parquet
-        footers or the discovery scan) — an upper bound on its distinct
-        keys:
+    def _prepare_mor(self, changes: DataFrame, op_col: str, lsn_col: str,
+                     post_dedup=None,
+                     batch_rows: int | None = None) -> tuple[list[DataFile], dict]:
+        """The apply's prepare, shared by both write modes: max-lsn dedup
+        to one survivor row per key, the post-dedup ``post_dedup`` (the
+        text UDF), and the survivor write as per-bucket files with
+        __lsn/__op. The heavy shuffle carries only per-partition dedup
+        SURVIVORS, never raw duplicates.
+
+        The max-lsn dedup takes one of three routes over two plans. The
+        one gate is ``batch_rows``, the batch's exact row count from
+        CdcEngine.run's discovery (parquet footers or the discovery
+        scan) — an upper bound on its distinct keys:
 
         * **struct max_by, one slice** (batch_rows <= TABLE_SLICE_ROWS =
           65,536, the reference's table-slice size and the Arrow batch
@@ -495,47 +487,47 @@ class LakeTable:
             F.col(lsn_col).cast("long").alias("__lsn"),
             F.col(op_col).alias("__op"),
         )
-        clustered = False
-        if not pre_deduplicated:
-            mx = None
+        pass1 = None
+        try:
             if (batch_rows is not None
                     and TABLE_SLICE_ROWS < batch_rows <= EXACT_MAX_ROWS):
-                mx = (delta.groupBy(key)
-                      .agg(F.max("__lsn").alias("__mx"))
-                      .limit(DEDUP_BCAST_KEYS + 1)
-                      .localCheckpoint(eager=True))
-                stats = mx.agg(F.count(F.lit(1)).alias("n"),
-                               F.min("__mx").alias("m")).collect()[0]
-                if stats["n"] > DEDUP_BCAST_KEYS:
-                    mx = None  # key set too large: at-scale fallback
-            if mx is not None:
+                pass1 = (delta.groupBy(key)
+                         .agg(F.max("__lsn").alias("__mx"))
+                         .limit(DEDUP_BCAST_KEYS + 1)
+                         .localCheckpoint(eager=True))
+                stats = pass1.agg(F.count(F.lit(1)).alias("n"),
+                                  F.min("__mx").alias("m")).collect()[0]
+            # a key set too large for the broadcast takes the fallback
+            if pass1 is not None and stats["n"] <= DEDUP_BCAST_KEYS:
                 lo = stats["m"]
                 if lo is not None:
                     delta = delta.filter(F.col("__lsn") >= F.lit(lo))
                 delta = delta.join(
-                    F.broadcast(mx.select(F.col(key).alias("__mxk"),
+                    F.broadcast(pass1.select(F.col(key).alias("__mxk"),
                                           "__mx")),
                     (F.col(key) == F.col("__mxk"))
                     & (F.col("__lsn") == F.col("__mx")),
                     "leftsemi")
                 delta = delta.withColumn("__b", bucket_expr(key, nb))
             else:
-                delta = delta.withColumn("__b", bucket_expr(key, nb))
-                others = [c for c in delta.columns if c not in (key, "__b")]
-                row = F.max_by(F.struct(*[F.col(c) for c in others]),
-                               F.col("__lsn"))
-                delta = (delta.groupBy("__b", key).agg(row.alias("__r"))
-                         .select("__b", key,
-                                 *[F.col(f"__r.{c}").alias(c) for c in others]))
+                delta = self._latest_per_key(
+                    delta.withColumn("__b", bucket_expr(key, nb)),
+                    by=("__b",))
             delta = delta.repartition(nb, F.col("__b"))
-            clustered = True
-        if post_dedup is not None:
-            delta = post_dedup(delta)
-        # typed nulls for schema columns the stream didn't carry
-        for f in fields:
-            if f.name not in delta.columns:
-                delta = delta.withColumn(f.name, F.lit(None).cast(f.dataType))
-        new_files = self._write_bucketed(delta, kind="delta", clustered=clustered)
+            if post_dedup is not None:
+                delta = post_dedup(delta)
+            # typed nulls for schema columns the stream didn't carry
+            for f in fields:
+                if f.name not in delta.columns:
+                    delta = delta.withColumn(f.name,
+                                             F.lit(None).cast(f.dataType))
+            new_files = self._write_bucketed(delta, kind="delta",
+                                             clustered=True)
+        finally:
+            if pass1 is not None:
+                # a JVM GC would release the checkpoint blocks only once
+                # the ContextCleaner finds them; drop them now
+                pass1._jdf.queryExecution().analyzed().rdd().unpersist(True)
         watermark = None
         for f in new_files:
             st = f.stats.get("__lsn")
@@ -548,8 +540,8 @@ class LakeTable:
 
     # ------------------------------------------------------------- internals
 
-    def _write_bucketed(self, df: DataFrame, only_buckets: list[int] | None = None,
-                        kind: str = "base", clustered: bool = False) -> list[DataFile]:
+    def _write_bucketed(self, df: DataFrame, kind: str = "base",
+                        clustered: bool = False) -> list[DataFile]:
         """Write rows as one parquet file per bucket under a fresh commit
         dir; returns DataFile entries with footer-accurate stats.
         ``clustered=True`` promises df already carries a __b bucket column
@@ -562,10 +554,8 @@ class LakeTable:
         commit = f"commit-{uuid.uuid4().hex[:12]}"
         out_dir = self.io.join(self.root, DATA_DIR, commit)
         if not clustered:
-            df = df.withColumn("__b", bucket_expr(key, nb))
-            if only_buckets is not None:
-                df = df.filter(F.col("__b").isin([int(b) for b in only_buckets]))
-            df = df.repartition(nb, F.col("__b"))
+            df = (df.withColumn("__b", bucket_expr(key, nb))
+                  .repartition(nb, F.col("__b")))
         (df.write.mode("overwrite").partitionBy("__b").parquet(out_dir))
         files: list[DataFile] = []
         schema_epoch = len(self.snapshot.schema_log)
@@ -580,6 +570,9 @@ class LakeTable:
                 fpath = self.io.join(out_dir, bdir, name)
                 targets.append((bucket, fpath,
                                 self.io.relpath(fpath, self.root)))
+        if not targets:
+            # no rows: nothing a snapshot could reference
+            self.io.delete_dir(out_dir)
         # footer reads are independent driver-side I/O on the epoch's
         # SERIAL path (Amdahl's s in BASELINE.md) — a thread pool turns
         # O(buckets) sequential opens into one round trip; object-store
@@ -593,9 +586,7 @@ class LakeTable:
         return files
 
     def _commit_files(self, new_files: list[DataFile], replace_buckets: list[int] | None,
-                      epoch: str | None, epoch_stats: dict | None,
                       base_files: list[DataFile] | None = None,
-                      max_retries: int = 20,
                       ledger_entries: dict[str, dict] | None = None) -> None:
         """Commit new files atomically. For bucket-replacing commits
         (merge/compact) ``base_files`` must be the file list the result
@@ -608,11 +599,8 @@ class LakeTable:
             {f.path for f in base_files if f.bucket in rb}
             if rb is not None and base_files is not None else None
         )
-        for _ in range(max_retries):
+        for _ in range(20):
             snap = latest_snapshot(self.root, self.io)
-            if epoch is not None and epoch in snap.ledger:
-                self.snapshot = snap
-                return  # someone else applied this epoch — converged
             if ledger_entries and all(k in snap.ledger for k in ledger_entries):
                 self.snapshot = snap
                 return  # whole batch already applied — converged
@@ -626,8 +614,6 @@ class LakeTable:
             else:
                 files = [f for f in snap.files if f.bucket not in rb] + new_files
             ledger = dict(snap.ledger)
-            if epoch is not None:
-                ledger[epoch] = epoch_stats
             if ledger_entries:
                 for k, v in ledger_entries.items():
                     # never overwrite another writer's entry (a racing
@@ -944,34 +930,29 @@ class LakeTable:
                     promoted = [_dc_replace(by_bucket[b][0], kind="base")
                                 for b in retag]
                     self._commit_files(promoted, replace_buckets=retag,
-                                       epoch=None, epoch_stats=None,
                                        base_files=base.files)
                     need = [b for b in need if len(by_bucket[b]) > 1]
                     if not need:
                         return
                     base = self.snapshot
-            raw = self.read(buckets=need, resolve=False)
-            key = self.snapshot.key_col
-            others = [c for c in raw.columns if c != key]
-            row = F.max_by(F.struct(*[F.col(c) for c in others]), F.col("__lsn"))
-            resolved = (raw.groupBy(key).agg(row.alias("__r"))
-                        .select(key, *[F.col(f"__r.{c}").alias(c) for c in others]))
+            resolved = self._latest_per_key(
+                self.read(buckets=need, resolve=False))
             if purge_deletes_below_lsn is not None:
                 resolved = resolved.filter(
                     (F.col("__op") != "delete")
                     | (F.col("__lsn") >= F.lit(int(purge_deletes_below_lsn))))
-            new_files = self._write_bucketed(resolved, only_buckets=need, kind="base")
-            self._commit_files(new_files, replace_buckets=need, epoch=None,
-                               epoch_stats=None, base_files=base.files)
+            new_files = self._write_bucketed(resolved)
+            self._commit_files(new_files, replace_buckets=need,
+                               base_files=base.files)
             return
         need = [b for b, fs in by_bucket.items()
                 if len(fs) > 1 and sum(x.rows for x in fs) < int(0.8 * target_rows)]
         if not need:
             return
         df = self.read(buckets=need)
-        new_files = self._write_bucketed(df, only_buckets=need)
-        self._commit_files(new_files, replace_buckets=need, epoch=None,
-                           epoch_stats=None, base_files=base.files)
+        new_files = self._write_bucketed(df)
+        self._commit_files(new_files, replace_buckets=need,
+                           base_files=base.files)
 
 
 def _footer_stats(path: str, stat_cols: list[str],

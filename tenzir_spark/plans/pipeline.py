@@ -164,7 +164,7 @@ class Pipeline:
     def import_into(self, table, epoch) -> dict:
         """Sink into a lake table under the exactly-once ledger — the
         reference's `import` (import.cpp:70)."""
-        return table.merge(self._df, epoch, pre_deduplicated=False)
+        return table.merge(self._df, epoch)
 
     @classmethod
     def export(cls, table, **read_kw) -> "Pipeline":

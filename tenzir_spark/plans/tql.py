@@ -1361,7 +1361,7 @@ def run_pipeline(p: Pipeline):
             df = df.withColumn("op", F.lit("upsert"))
         if "lsn" not in df.columns:
             df = df.withColumn("lsn", F.lit(0).cast("long"))
-        return table.merge(df, epoch, pre_deduplicated=False)
+        return table.merge(df, epoch)
     if sink.kind == "stdout":
         # `to -` / tenzir exec default sink: NDJSON to stdout. Driver-side
         # by nature — results only, never the bulk path.

@@ -7,7 +7,7 @@ The reference is a continuous engine with demand-driven pull
 - follow-file sources (``file ... --follow`` ≅ readStream on a directory)
 - windowed aggregation with watermarks (superset of the reference's
   ``summarize ... resolution``)
-- the CDC tail as a stream: foreachBatch(CdcEngine.apply_epoch) gives the
+- the CDC tail as a stream: foreachBatch(CdcEngine.run) gives the
   exactly-once lake sink (micro-batch id = checkpoint epoch).
 """
 
@@ -136,11 +136,11 @@ def stream_cdc_apply(
     stream: DataFrame,
     table,
     checkpoint_dir: str,
-    n_salts: int = 16,
     trigger_seconds: int | None = None,
 ):
-    """Continuous CDC tail -> lake: each micro-batch is applied through
-    the engine under the epoch ledger keyed by the micro-batch id.
+    """Continuous CDC tail -> lake: each micro-batch is stamped with its
+    micro-batch id as its epoch and applied through CdcEngine.run, the
+    one apply path, so the ledger is keyed by the micro-batch id.
 
     Exactly-once: Spark guarantees monotone batch ids per checkpoint dir
     and replays the last uncommitted batch on restart; the lake ledger
@@ -148,12 +148,11 @@ def stream_cdc_apply(
     """
     from tenzir_spark.cdc.engine import CdcEngine
 
-    spark = stream.sparkSession
-    engine = CdcEngine(spark, table, n_salts=n_salts)
+    engine = CdcEngine(stream.sparkSession, table)
 
     def apply_batch(batch_df: DataFrame, batch_id: int):
-        batch_df = batch_df.withColumn("epoch", F.lit(int(batch_id)).cast("int"))
-        engine.apply_epoch(batch_df, int(batch_id))
+        engine.run(batch_df.withColumn("epoch",
+                                       F.lit(int(batch_id)).cast("int")))
 
     writer = (stream.writeStream.foreachBatch(apply_batch)
               .option("checkpointLocation", checkpoint_dir)

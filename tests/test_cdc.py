@@ -13,7 +13,6 @@ from tenzir_spark.cdc import (
     gen_change_log,
     pages_schema,
     replay,
-    salted_deduplicate,
 )
 from tenzir_spark.lake import LakeTable
 
@@ -36,7 +35,7 @@ def change_log(spark):
 def applied(spark, change_log, tmp_path_factory):
     root = str(tmp_path_factory.mktemp("lake") / "pages")
     table = LakeTable.create(spark, root, pages_schema(), "url", num_buckets=8)
-    engine = CdcEngine(spark, table, n_salts=4)
+    engine = CdcEngine(spark, table)
     results = engine.run(change_log)
     return table, engine, results
 
@@ -105,12 +104,12 @@ def test_resume_from_partial(spark, change_log, tmp_path_factory):
     """Apply a prefix, 'crash', resume the whole log: same final state."""
     root = str(tmp_path_factory.mktemp("lake2") / "pages")
     table = LakeTable.create(spark, root, pages_schema(), "url", num_buckets=8)
-    engine = CdcEngine(spark, table, n_salts=4)
-    engine.apply_epoch(change_log, 0)
-    engine.apply_epoch(change_log, 1)
+    engine = CdcEngine(spark, table)
+    engine.run(change_log, epochs=[0])
+    engine.run(change_log, epochs=[1])
     # resume: new engine instance (fresh process semantics), full run
     table2 = LakeTable.load(spark, root)
-    engine2 = CdcEngine(spark, table2, n_salts=4)
+    engine2 = CdcEngine(spark, table2)
     engine2.run(change_log)
     expected, _ = replay([r.asDict() for r in change_log.collect()])
     got = {r["url"] for r in table2.read().collect()}
@@ -121,17 +120,25 @@ def test_ledger_watermarks_monotone(applied):
     table, _, results = applied
     marks = [e["lsn_watermark"] for e in results if e.get("lsn_watermark") is not None]
     assert marks == sorted(marks)
+    # one checkpoint epoch per committed batch: the ledger entries that
+    # are not coalesced into a later epoch
     cp = table.checkpoints()
-    n = cp.select("checkpoint_epoch").distinct().count()
-    assert n == N_EVENTS // EPOCH_SIZE
+    got = {r[0] for r in cp.select("checkpoint_epoch").distinct().collect()}
+    own = {int(e) for e, entry in table.snapshot.ledger.items()
+           if "coalesced_into" not in entry}
+    assert got == own
 
 
-def test_salted_dedup_equals_plain_dedup(spark, change_log):
-    from tenzir_spark.operators import deduplicate
-    data = change_log.filter("op != 'schema'").select("url", "lsn", "op", "lang")
-    a = salted_deduplicate(data, "url", "lsn", n_salts=4)
-    b = deduplicate(data, "url", "lsn")
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+def test_cow_run_commits_one_snapshot_per_batch(applied):
+    """A copy-on-write run coalesces like a merge-on-read one: the
+    6-epoch log is one batch, so the apply publishes a snapshot for the
+    epoch-3 ADD and one for the whole batch, not one per epoch."""
+    table, _, _ = applied
+    assert table.mode == "cow"
+    ledger = table.snapshot.ledger
+    assert len(ledger) == N_EVENTS // EPOCH_SIZE
+    assert ledger[str(N_EVENTS // EPOCH_SIZE - 1)]["coalesced"] == len(ledger)
+    assert table.snapshot.version == 3  # create, alter, one batch commit
 
 
 def test_batches_split_on_rename_gap_and_cap():
@@ -165,10 +172,10 @@ def test_mor_coalesced_ledger_and_resume(spark, change_log, tmp_path_factory):
     root = str(tmp_path_factory.mktemp("lake4") / "pages")
     table = LakeTable.create(spark, root, pages_schema(), "url",
                              num_buckets=8, write_mode="mor")
-    engine = CdcEngine(spark, table, n_salts=4)
+    engine = CdcEngine(spark, table)
     # epochs 0,1 applied individually (simulates an earlier serial tail)
-    engine.apply_epoch(change_log, 0)
-    engine.apply_epoch(change_log, 1)
+    engine.run(change_log, epochs=[0])
+    engine.run(change_log, epochs=[1])
     results = engine.run(change_log)  # resumes: skips 0,1; coalesces rest
     assert results[0].get("skipped") and results[1].get("skipped")
     ledger = table.snapshot.ledger
@@ -218,7 +225,7 @@ def test_coalesced_add_gate_matches_sequential(spark, tmp_path_factory):
         root = str(tmp_path_factory.mktemp("lakeg") / "t")
         t = LakeTable.create(spark, root, schema, "url", num_buckets=2,
                              write_mode="mor")
-        CdcEngine(spark, t, n_salts=2).run(log, max_coalesce=mode_coalesce)
+        CdcEngine(spark, t).run(log, max_coalesce=mode_coalesce)
         return {r["url"]: r.asDict() for r in t.read().collect()}
 
     seq, coal = apply(1), apply(8)
@@ -232,7 +239,7 @@ def test_mor_final_state_matches_replay(spark, change_log, tmp_path_factory):
     root = str(tmp_path_factory.mktemp("lake3") / "pages")
     table = LakeTable.create(spark, root, pages_schema(), "url",
                              num_buckets=8, write_mode="mor")
-    engine = CdcEngine(spark, table, n_salts=4)
+    engine = CdcEngine(spark, table)
     engine.run(change_log)
     expected, columns = replay([r.asDict() for r in change_log.collect()])
     got = {r["url"]: r.asDict() for r in table.read().collect()}
@@ -270,7 +277,7 @@ def test_footer_and_scan_discovery_identical(spark, change_log,
         root = str(tmp_path_factory.mktemp(f"lake_f{force_scan}") / "pages")
         table = LakeTable.create(spark, root, pages_schema(), "url",
                                  num_buckets=8, write_mode="mor")
-        CdcEngine(spark, table, n_salts=4).run(plog)
+        CdcEngine(spark, table).run(plog)
         rows = {}
         for r in table.read().collect():
             d = r.asDict()
@@ -310,7 +317,7 @@ def test_dedup_bcast_and_fallback_paths_identical(spark, change_log,
                    / "pages")
         table = LakeTable.create(spark, root, pages_schema(), "url",
                                  num_buckets=8, write_mode="mor")
-        CdcEngine(spark, table, n_salts=4).run(change_log)
+        CdcEngine(spark, table).run(change_log)
         # only the two-pass routes run (and checkpoint) a pass 1
         assert bool(pass1) == (slice_rows == 0)
         rows = {}
@@ -322,6 +329,24 @@ def test_dedup_bcast_and_fallback_paths_identical(spark, change_log,
     assert states[0] and states[0] == states[1] == states[2]
 
 
+def test_two_pass_releases_pass1_checkpoint(spark, change_log,
+                                            tmp_path_factory, monkeypatch):
+    """The broadcast two-pass's eager pass-1 localCheckpoint is released
+    as soon as the survivors are written, not whenever a JVM GC lets
+    the ContextCleaner find it: right after the apply, with no forced
+    GC, the persisted-RDD count is back where it started."""
+    import tenzir_spark.lake.table as table_mod
+    monkeypatch.setattr(table_mod, "TABLE_SLICE_ROWS", 0)
+    root = str(tmp_path_factory.mktemp("lake_ckpt") / "pages")
+    table = LakeTable.create(spark, root, pages_schema(), "url",
+                             num_buckets=8, write_mode="mor")
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = persistent().size()
+    CdcEngine(spark, table).run(change_log)
+    assert len(table.snapshot.ledger) == N_EVENTS // EPOCH_SIZE
+    assert persistent().size() == before
+
+
 def test_run_over_empty_log_commits_nothing(spark, change_log,
                                             tmp_path_factory):
     """An empty frame (what a live tail's idle micro-batch hands run())
@@ -330,7 +355,7 @@ def test_run_over_empty_log_commits_nothing(spark, change_log,
     table = LakeTable.create(spark, root, pages_schema(), "url",
                              num_buckets=8, write_mode="mor")
     version = table.snapshot.version
-    assert CdcEngine(spark, table, n_salts=4).run(change_log.limit(0)) == []
+    assert CdcEngine(spark, table).run(change_log.limit(0)) == []
     assert table.refresh().snapshot.version == version
     assert not table.snapshot.ledger
 
@@ -370,7 +395,7 @@ def test_mor_apply_jobs_carry_callers_job_group(spark, change_log,
         first = grouped_job(f"before-{run_id}")
         ungrouped = set(tracker.getJobIdsForGroup(None))
         sc.setJobGroup(f"apply-{run_id}", "cdc apply")
-        CdcEngine(spark, table, n_salts=4).run(plog)
+        CdcEngine(spark, table).run(plog)
         last = grouped_job(f"after-{run_id}")
     finally:
         for prop in ("spark.jobGroup.id", "spark.job.description",

@@ -1,6 +1,6 @@
 """Randomized north-rule fuzz: for random log shapes (epoch size, schema-
 change cadence, an injected mid-stream RENAME), random engine knobs
-(coalesce width, salt count, MoR vs CoW) and a random crash/resume split,
+(coalesce width, MoR vs CoW) and a random crash/resume split,
 the engine's final table state must equal the pure-Python reference
 replay byte-for-byte and re-application must be a no-op (exactly-once).
 
@@ -68,7 +68,6 @@ def _assert_state_equals_replay(table, log_rows):
     epoch_size=st.sampled_from([40, 70, 110]),
     schema_every=st.integers(2, 5),
     max_coalesce=st.sampled_from([1, 2, 3, 8]),
-    n_salts=st.sampled_from([1, 4]),
     rename_at=st.one_of(st.none(), st.integers(1, 6)),
     crash_after=st.integers(0, 6),
     mode=st.sampled_from(["mor", "mor", "cow"]),
@@ -76,7 +75,7 @@ def _assert_state_equals_replay(table, log_rows):
 )
 def test_randomized_replay_equality(spark, tmp_path_factory, n_epochs,
                                     epoch_size, schema_every, max_coalesce,
-                                    n_salts, rename_at, crash_after, mode,
+                                    rename_at, crash_after, mode,
                                     seed):
     n_events = n_epochs * epoch_size
     log = gen_change_log(
@@ -94,7 +93,7 @@ def test_randomized_replay_equality(spark, tmp_path_factory, n_epochs,
     root = str(tmp_path_factory.mktemp("fuzz") / "pages")
     table = LakeTable.create(spark, root, pages_schema(), "url",
                              num_buckets=4, write_mode=mode)
-    engine = CdcEngine(spark, table, n_salts=n_salts)
+    engine = CdcEngine(spark, table)
 
     # crash/resume: apply a prefix, then a FRESH engine resumes the whole
     # log from the ledger (fresh-process semantics)
@@ -103,7 +102,7 @@ def test_randomized_replay_equality(spark, tmp_path_factory, n_epochs,
         engine.run(log, epochs=list(range(prefix)),
                    max_coalesce=max_coalesce)
         table = LakeTable.load(spark, root)
-        engine = CdcEngine(spark, table, n_salts=n_salts)
+        engine = CdcEngine(spark, table)
     engine.run(log, max_coalesce=max_coalesce)
 
     _assert_state_equals_replay(table, log_rows)

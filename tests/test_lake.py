@@ -325,6 +325,26 @@ def test_empty_epoch_releases_persist(table, spark):
     assert table.merge(empty, 0).get("skipped") is True
 
 
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+def test_out_of_order_lsn_rule_per_write_mode(spark, tmp_path, mode):
+    """The lsn rule of each write mode, pinned: a copy-on-write merge
+    overwrites the stored row whatever its lsn (base rows rank below
+    every change), while merge-on-read keeps the higher-lsn row. An
+    empty copy-on-write batch still ledgers its epoch."""
+    t = LakeTable.create(spark, str(tmp_path / mode), SCHEMA, "url",
+                         num_buckets=2, write_mode=mode)
+    _merge(t, spark, [("a", "insert", 10, 1), ("b", "insert", 11, 2)], 0)
+    _merge(t, spark, [("a", "update", 5, 99)], 1)
+    got = {r.url: r.v for r in t.read().collect()}
+    assert got == {"a": 99 if mode == "cow" else 1, "b": 2}
+    if mode == "cow":
+        empty = spark.createDataFrame(
+            [], "url string, op string, lsn long, v long")
+        assert t.merge(empty, 2)["rows_applied"] == 0
+        assert t.refresh().snapshot.ledger["2"]["rows_applied"] == 0
+        assert {r.url: r.v for r in t.read().collect()} == got
+
+
 def test_merge_stats_failure_releases_persist(table, spark, monkeypatch):
     """An exception inside the stats collect (before the merge loop) must
     not leak the change-set cache either."""

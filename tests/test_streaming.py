@@ -141,7 +141,7 @@ def test_run_stream_epoch_ledger_two_arrivals(spark, tmp_path):
 
     table = LakeTable.create(spark, str(tmp_path / "lake"), pages_schema(),
                              "url", num_buckets=4, write_mode="mor")
-    eng = CdcEngine(spark, table, n_salts=4)
+    eng = CdcEngine(spark, table)
     eng.run_stream(log_dir, cp_dir).awaitTermination(120)
     table.refresh()
     assert sorted(int(k) for k in table.snapshot.ledger) == [0, 1, 2]

@@ -49,7 +49,7 @@ def main() -> None:
                          schema_change_every=3, seed=42)
     table = LakeTable.create(spark, lake_dir + "/pages", pages_schema(),
                              "url", num_buckets=8)
-    engine = CdcEngine(spark, table, n_salts=4)
+    engine = CdcEngine(spark, table)
     t0 = time.monotonic()
     engine.run(log)
     dt = time.monotonic() - t0
