@@ -21,10 +21,11 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from tenzir_spark import operators as ops  # noqa: E402
 from tenzir_spark.functions import dedup, similarity, text  # noqa: E402
+from tenzir_spark.sources.formats import read_parquet  # noqa: E402
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return read_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
 def _ckpt(df: DataFrame) -> DataFrame:
@@ -37,6 +38,11 @@ def _ckpt(df: DataFrame) -> DataFrame:
     materializes the lineage once INSIDE the timed action and the
     sampler reads the stored partitions. A repartition barrier does not
     work — CollapseRepartition removes it under a global sort.
+
+    ``localCheckpoint`` is not fault-tolerant: the materialized
+    partitions live in the executors' block managers and the lineage
+    behind them is truncated, so losing an executor fails the query and
+    nothing recomputes the lost partitions.
 
     TENZIR_SPARK_NO_CKPT=1 skips the barrier (results identical) so
     plan audits can render the full lineage the checkpoint hides behind

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from tenzir_spark.cdc.extract import extract_text_udf
 from tenzir_spark.lake.table import LakeTable
+from tenzir_spark.sources.formats import read_parquet
 
 
 def _epoch_rows_from_footers(change_log: DataFrame) -> dict[int, int] | None:
@@ -306,7 +307,7 @@ class CdcEngine:
         Returns the StreamingQuery; results land in the table + ledger.
         """
         spark = self.spark
-        schema = spark.read.parquet(log_dir).schema
+        schema = read_parquet(spark, log_dir).schema
         stream = spark.readStream.schema(schema).parquet(log_dir)
 
         def apply_batch(batch_df, batch_id):

@@ -21,6 +21,7 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, SparkSession
 
 from tenzir_spark import operators as ops
+from tenzir_spark.sources.formats import read_parquet
 
 
 class Pipeline:
@@ -55,7 +56,7 @@ class Pipeline:
 
     @classmethod
     def read_parquet(cls, spark: SparkSession, path: str) -> "Pipeline":
-        return cls(spark.read.parquet(path))
+        return cls(read_parquet(spark, path))
 
     @classmethod
     def read_json(cls, spark: SparkSession, path: str, **options) -> "Pipeline":

@@ -127,18 +127,19 @@ class _NodeStore:
         import os
 
         from pyspark.sql import types as T
-        reader = spark.read.option("mergeSchema", "true") \
-            .option("recursiveFileLookup", "true")
+
+        from tenzir_spark.sources.formats import read_parquet
+        opts = {"mergeSchema": "true", "recursiveFileLookup": "true"}
         if "://" not in self.root:
             if not glob.glob(os.path.join(self.root, "import-*")) and \
                     not glob.glob(os.path.join(self.root, "*.parquet")) and \
                     not glob.glob(os.path.join(self.root, "part-*")):
                 return spark.createDataFrame([], T.StructType([]))
-            return reader.parquet(self.root)
+            return read_parquet(spark, self.root, **opts)
         # URI store roots (shared storage): no driver-local glob — probe
         # by reading and map the empty-store failure to an empty frame
         try:
-            return reader.parquet(self.root)
+            return read_parquet(spark, self.root, **opts)
         except Exception:
             return spark.createDataFrame([], T.StructType([]))
 

@@ -81,6 +81,18 @@ def package_pyfiles(out_dir: str | None = None) -> str:
     return zip_path
 
 
+def default_driver_memory() -> str:
+    """The driver heap when ``SPARK_DRIVER_MEM`` is unset: half of the
+    machine's physical memory, at most 32g. The bounded driver collects
+    (the ngram broadcast-index build) want a large heap, but one larger
+    than the machine lets the JVM grow into the OOM killer."""
+    try:
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (ValueError, OSError, AttributeError):
+        return "32g"
+    return f"{max(1, min(32 << 10, phys // 2 >> 20))}m"
+
+
 def get_spark(
     app_name: str = "tenzir_spark",
     master: str | None = None,
@@ -124,7 +136,8 @@ def get_spark(
         # floor is moot) — Spark's own knob for small-file parallelism
         .config("spark.sql.files.minPartitionNum", str(shuffle_partitions))
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "32g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory())
         # bounded driver collects (e.g. the ngram broadcast-index build
         # gates on ~1 GB of estimated postings) can exceed the 1g default
         .config("spark.driver.maxResultSize", "4g")

@@ -9,7 +9,13 @@ CEF) are the custom parts, built on spark.read.text + Column expressions
 
 from __future__ import annotations
 
+import hashlib
+import os
 import re
+import stat
+import threading
+from collections import OrderedDict
+from urllib.parse import urlsplit
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -1494,8 +1500,132 @@ def read_syslog(spark: SparkSession, path: str) -> DataFrame:
 
 # ------------------------------------------------------------------ parquet / feather
 
-def read_parquet(spark: SparkSession, path: str, **options) -> DataFrame:
-    return spark.read.options(**options).parquet(path)
+# SQL confs whose values change the schema parquet inference returns
+_PARQUET_INFERENCE_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.caseSensitive",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    # a partition column's type comes from the given schema, not its values
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+)
+# most sources the catalog remembers; the least recently read goes first
+CATALOG_ENTRIES = 256
+
+
+class SchemaCatalog:
+    """Inferred parquet schemas of this process's sources, the analog of
+    the reference's in-memory catalog (catalog.cpp:71-115): a query
+    plans against the schema registered for its source instead of
+    deriving it again.
+
+    An entry maps a source (paths, reader options, inference confs) to
+    the listing signature it was inferred at and the schema. Only the
+    schema is kept, never a DataFrame: a kept frame pins a stale file
+    index. Guarded by a lock, because the web server plans queries
+    from threads."""
+
+    def __init__(self) -> None:
+        self._entries: OrderedDict[tuple, tuple[bytes, T.StructType]] = OrderedDict()
+        self._lock = threading.Lock()
+
+    def __len__(self) -> int:
+        return len(self._entries)
+
+    def get(self, source: tuple, signature: bytes) -> T.StructType | None:
+        """The schema inferred for ``source`` at ``signature``; None when
+        the source is unknown or its files changed since."""
+        with self._lock:
+            hit = self._entries.get(source)
+            if hit is None or hit[0] != signature:
+                return None
+            self._entries.move_to_end(source)
+            return hit[1]
+
+    def put(self, source: tuple, signature: bytes, schema: T.StructType) -> None:
+        with self._lock:
+            self._entries[source] = (signature, schema)
+            self._entries.move_to_end(source)
+            while len(self._entries) > CATALOG_ENTRIES:
+                self._entries.popitem(last=False)
+
+
+SOURCE_CATALOG = SchemaCatalog()
+
+
+def _local_path(path: str) -> str | None:
+    """The driver-local filesystem path a reader path names; None for a
+    URI of another scheme, a Hadoop glob, a ``file:`` URI with escapes
+    (left to Hadoop's own decoding), or a relative path (the JVM
+    resolves it against its own start directory, which a later
+    ``os.chdir`` does not move)."""
+    if any(c in path for c in "*?[]{}\\"):
+        return None
+    scheme = re.match(r"[A-Za-z][A-Za-z0-9+.-]*:", path)
+    if scheme is None:
+        return path if os.path.isabs(path) else None
+    if scheme.group(0).lower() != "file:" or any(c in path for c in "%#"):
+        return None
+    url = urlsplit(path)
+    return url.path if url.netloc in ("", "localhost") else None
+
+
+def _listing_signature(paths: tuple[str, ...]) -> bytes | None:
+    """Digest of ``(path, st_ino, st_size, st_mtime_ns)`` of every file
+    under ``paths``, hidden ``_``/``.`` files included, so a rewritten,
+    added or deleted file (or a new partition directory) changes it.
+    None when a path is not driver-local or cannot be listed."""
+    h = hashlib.blake2b(digest_size=16)
+    try:
+        for p in paths:
+            local = _local_path(p)
+            if local is None:
+                return None
+            st = os.stat(local)
+            if not stat.S_ISDIR(st.st_mode):
+                h.update(repr((p, st.st_ino, st.st_size, st.st_mtime_ns)).encode())
+                continue
+            for dirpath, dirs, names in os.walk(local, followlinks=True):
+                dirs.sort()
+                for n in sorted(names):
+                    f = os.path.join(dirpath, n)
+                    s = os.stat(f)
+                    h.update(repr((f, s.st_ino, s.st_size, s.st_mtime_ns)).encode())
+    except OSError:
+        return None
+    return h.digest()
+
+
+def read_parquet(spark: SparkSession, *paths: str, **options) -> DataFrame:
+    """Parquet source through the session's schema catalog.
+
+    The first read of a source runs Spark's own inference (a job) and
+    registers the inferred ``StructType`` in ``SOURCE_CATALOG``; a later
+    read of the unchanged source passes that schema to the reader,
+    which plans without a job. Plan and rows are the inferred read's.
+
+    The key is the tuple of ``paths``, the sorted reader ``options``,
+    the values of the confs in ``_PARQUET_INFERENCE_CONFS``, and a
+    driver-side listing signature: ``(path, st_ino, st_size,
+    st_mtime_ns)`` of every file under each path, hidden files
+    included. Any rewritten, added or deleted file therefore infers
+    again. Remote URIs (any scheme but ``file:``), glob paths and
+    relative paths are not cached: they read exactly as
+    ``spark.read.parquet`` does. A failed read caches nothing."""
+    reader = spark.read.options(**options)
+    signature = _listing_signature(paths)
+    if signature is None:
+        return reader.parquet(*paths)
+    source = (paths, tuple(sorted((k, str(v)) for k, v in options.items())),
+              tuple(spark.conf.get(k, None) for k in _PARQUET_INFERENCE_CONFS))
+    schema = SOURCE_CATALOG.get(source, signature)
+    if schema is not None:
+        return reader.schema(schema).parquet(*paths)
+    df = reader.parquet(*paths)
+    SOURCE_CATALOG.put(source, signature, df.schema)
+    return df
 
 
 def write_parquet(df: DataFrame, path: str, mode: str = "overwrite",

@@ -242,6 +242,11 @@ def test_expire_snapshots_reclaims_replaced_files(spark, tmp_path):
     after = len([p for p in t.io.walk_files(data_root) if p.endswith(".parquet")])
     assert res["snapshots_removed"] >= 2 and res["files_removed"] >= 1
     assert after < before
+    # a commit dir whose parquet was reclaimed goes whole: no _SUCCESS or
+    # .crc sidecars stay behind without a referenced file
+    live = {f.path.split("/")[1] for f in t.snapshot.files}
+    left = {n for n in _os.listdir(data_root) if n.startswith("commit-")}
+    assert left == live and res["dirs_removed"] >= 1
     assert {r.url: r.v for r in t.read().collect()} == {"a": 2, "b": 20}
     # ledger survives inside the retained snapshot (idempotency intact)
     assert set(t.snapshot.ledger) == {"0", "1", "2"}

@@ -1,6 +1,7 @@
-"""session.py's zipimporter backport: ``importlib.invalidate_caches()``
+"""session.py: the zipimporter backport (``importlib.invalidate_caches()``
 drops each zip archive's cached directory instead of re-reading it, and
-a module added to an archive afterwards still imports."""
+a module added to an archive afterwards still imports), and the default
+driver heap sized to the machine."""
 
 from __future__ import annotations
 
@@ -16,7 +17,7 @@ from pyspark.sql import functions as F
 
 import tenzir_spark.session  # noqa: F401  (installs the backport)
 
-pytestmark = pytest.mark.skipif(
+backport = pytest.mark.skipif(
     sys.version_info >= (3, 13),
     reason="zipimport defers directory reads itself from Python 3.13 on")
 
@@ -35,6 +36,7 @@ def zip_on_path(tmp_path, monkeypatch):
     zipimport._zip_directory_cache.pop(archive, None)
 
 
+@backport
 def test_invalidate_caches_reads_no_zip_directory(zip_on_path, monkeypatch):
     archive, name = zip_on_path
     assert importlib.import_module(name).VALUE == 1
@@ -52,6 +54,7 @@ def test_invalidate_caches_reads_no_zip_directory(zip_on_path, monkeypatch):
     assert reads == []
 
 
+@backport
 def test_module_added_to_zip_imports_after_invalidate(zip_on_path):
     archive, name = zip_on_path
     assert importlib.import_module(name).VALUE == 1
@@ -62,6 +65,7 @@ def test_module_added_to_zip_imports_after_invalidate(zip_on_path):
     assert importlib.reload(sys.modules[name]).VALUE == 1
 
 
+@backport
 def test_spark_worker_skips_zip_rescan(spark):
     """A pandas UDF evaluated after the engine's text UDF, in the same
     Python worker, finds the worker's zip importers no longer re-read
@@ -91,3 +95,26 @@ def test_spark_worker_skips_zip_rescan(spark):
     importers, reads = row.r
     assert importers > 0
     assert reads == 0
+
+
+@pytest.mark.parametrize("phys_gib,expect", [
+    (15, "7680m"),   # half of a 15 GiB machine
+    (64, "32768m"),  # exactly the cap
+    (256, "32768m"),  # capped at 32g
+])
+def test_default_driver_memory_is_half_of_physical_capped(monkeypatch, phys_gib, expect):
+    from tenzir_spark import session
+
+    pages = {"SC_PAGE_SIZE": 4096, "SC_PHYS_PAGES": phys_gib * (1 << 30) // 4096}
+    monkeypatch.setattr(session.os, "sysconf", pages.__getitem__)
+    assert session.default_driver_memory() == expect
+
+
+def test_default_driver_memory_without_sysconf(monkeypatch):
+    from tenzir_spark import session
+
+    def unsupported(name):
+        raise ValueError(name)
+
+    monkeypatch.setattr(session.os, "sysconf", unsupported)
+    assert session.default_driver_memory() == "32g"
