@@ -11,13 +11,17 @@ Four tiers, each with its scale story:
   grouping by signature bands.
 - n-gram Jaccard: exact verification on candidate pairs only.
 
+The minhash, SimHash and n-gram posting pair generators share one
+bucket-scan kernel, ``_bucket_pairs``: it walks a partition sorted by
+bucket key, carries the run split across Arrow batches, applies the
+bucket cap and yields every within-run pair; each family supplies only
+its pair predicate and output frame.
+
 All hashing uses xxhash64(col, seed) (JVM) so results are deterministic
 and identical across runs/cluster sizes.
 """
 
 from __future__ import annotations
-
-import os
 
 import numpy as np
 import pandas as pd
@@ -80,33 +84,80 @@ def _needs_fanout(df: DataFrame, par: int) -> bool:
         return False
 
 
-def _dense_verify_bytes() -> int:
-    """Per-task byte bound for the dense-incidence exact-verify matrix
-    (kept rows x distinct shingle hashes, uint8). Above it the bucket
-    scan falls back to the posting-triangle plan, whose memory is
-    O(postings) regardless of universe size — the at-scale shape for
-    real text, where the universe grows with the corpus. Parameterised
-    for production tasks with different memory headroom."""
-    return int(os.environ.get("TENZIR_SPARK_DENSE_VERIFY_BYTES",
-                              str(64_000_000)))
+# Per-task byte bound for the dense-incidence exact-verify matrix (kept
+# rows x distinct shingle hashes, uint8). Above it the minhash bucket scan
+# falls back to the posting-triangle plan, whose memory is O(postings)
+# regardless of universe size — the at-scale shape for real text, where
+# the universe grows with the corpus.
+DENSE_VERIFY_BYTES = 64_000_000
 
 
-def _pair_bounded_slices(starts, sizes, max_pairs: int = 16_000_000):
-    """Yield (starts, sizes) slices of a bucket list whose summed pair
-    triangles stay under ``max_pairs``, bounding one emission's transient
-    arrays no matter how many near-cap buckets a partition holds (a
-    single bucket is already bounded by the caller's cap). Guards the
-    vectorized bucket scans at scale factors where bucket sizes approach
-    their caps."""
-    pairs = sizes.astype(np.int64) * (sizes.astype(np.int64) - 1) // 2
-    cum = np.cumsum(pairs)
-    s = 0
-    while s < len(sizes):
-        base = int(cum[s - 1]) if s else 0
-        e = int(np.searchsorted(cum, base + max_pairs, side="left")) + 1
-        e = max(e, s + 1)
-        yield starts[s:e], sizes[s:e]
-        s = e
+def _triangles(starts, sizes):
+    """Every within-run index pair ``(ia, ib)``, ``ia < ib``, of the runs
+    ``[starts[i], starts[i] + sizes[i])``. Run sizes cluster tightly
+    (2, 3, 4...), so same-size runs emit their triangles through ONE
+    fancy-index gather per distinct size: the Python loop runs a handful
+    of times per call, never once per row."""
+    ia_l, ib_l = [np.empty(0, np.int64)], [np.empty(0, np.int64)]
+    for m in np.unique(sizes):
+        st = starts[sizes == m]
+        iu, ju = np.triu_indices(int(m), 1)
+        ia_l.append((st[:, None] + iu[None, :]).ravel())
+        ib_l.append((st[:, None] + ju[None, :]).ravel())
+    return np.concatenate(ia_l), np.concatenate(ib_l)
+
+
+def _bucket_pairs(batches, load, key: str, cap: int | None,
+                  max_pairs: int = 16_000_000):
+    """The near-dup bucket scan shared by the minhash, n-gram and simhash
+    pair generators: yields ``(arrays, ia, ib)`` for every within-run
+    pair of the runs of equal ``key`` in one ``mapInPandas`` partition
+    that arrives sorted by ``key``. ``load(pdf)`` turns a batch into a
+    dict of row-aligned numpy arrays (2-D allowed: axis 0 is the row) that
+    includes ``key``; ``ia``/``ib`` are row indices into ``arrays``.
+
+    Carry invariant: the last run of a batch may continue into the next
+    Arrow batch, so its rows are held back and prepended (one
+    ``np.concatenate`` on axis 0 per array) to the next batch; the
+    partition's final run is flushed after the last batch. Every run is
+    therefore seen whole, exactly once, however the batches split it.
+
+    Cap rule: a run of ``size`` rows emits its pairs iff
+    ``2 <= size <= cap`` (``cap=None``: no upper bound) — an oversized
+    run is one degenerate duplicate class, not pair-enumeration work.
+
+    Pair bound: the kept runs of one batch are emitted in slices whose
+    summed triangles stay under ``max_pairs`` (a single run is already
+    bounded by the cap), bounding one emission's transient arrays no
+    matter how many near-cap runs a partition holds."""
+    def emit(arrays, starts, sizes):
+        keep = sizes >= 2
+        if cap is not None:
+            keep &= sizes <= cap
+        starts, sizes = starts[keep], sizes[keep]
+        cum = np.cumsum(sizes * (sizes - 1) // 2)
+        s = 0
+        while s < len(sizes):
+            base = int(cum[s - 1]) if s else 0
+            e = max(int(np.searchsorted(cum, base + max_pairs)) + 1, s + 1)
+            yield (arrays, *_triangles(starts[s:e], sizes[s:e]))
+            s = e
+
+    carry = None
+    for pdf in batches:
+        if not len(pdf):
+            continue
+        arrays = load(pdf)
+        if carry is not None:
+            arrays = {c: np.concatenate([carry[c], a])
+                      for c, a in arrays.items()}
+        kv = arrays[key]
+        starts = np.flatnonzero(np.concatenate([[True], kv[1:] != kv[:-1]]))
+        carry = {c: a[starts[-1]:] for c, a in arrays.items()}
+        yield from emit(arrays, starts[:-1], np.diff(starts))
+    if carry is not None:
+        yield from emit(carry, np.zeros(1, np.int64),
+                        np.array([len(carry[key])], np.int64))
 
 
 # ---------------------------------------------------------------- exact
@@ -247,6 +298,27 @@ def minhash_signature(shingles: Column, n_hashes: int = 64, seed: int = 1,
     return F.array(*sigs)
 
 
+def _first_band_mask(eq, band_a, band_b, bands: int, rows_per_band: int):
+    """FIRST-COLLIDING-BAND emission for minhash bucket pairs: True where
+    the lowest band whose signature slices fully agree (``eq`` is the
+    (pairs, n_hashes) agreement matrix) is the bucket's band, so each pair
+    leaves the scan exactly once and the result is distinct by
+    construction — no cross-band dropDuplicates exchange. A
+    REAL slice match is required: a pair thrown together only by a 2^-64
+    bucket-key collision is dropped, which is exactly the oracle's
+    candidate definition (its banded join compares the slices).
+
+    ``band_a == band_b`` guards a key collision ACROSS bands: one bucket
+    then holds the band-b row and the band-c row of the same doc, and
+    without the guard the pair would be emitted from both of them (and a
+    doc could pair with itself). Only the first ``bands * rows_per_band``
+    hashes band; a non-divisible tail counts toward the estimate only."""
+    eqb = eq[:, :bands * rows_per_band] \
+        .reshape(len(eq), bands, rows_per_band).all(axis=2)
+    return (eqb.any(axis=1) & (eqb.argmax(axis=1) == band_a)
+            & (band_a == band_b))
+
+
 def minhash_lsh_candidates(
     df: DataFrame,
     id_col: str,
@@ -257,7 +329,6 @@ def minhash_lsh_candidates(
     seed: int = 1,
     hash_family: str = "xxhash64",
     max_bucket: int = 1024,
-    cache_signatures: bool = True,
     exact_verify: bool = False,
     threshold: float = 0.5,
     min_est: float | None = None,
@@ -311,8 +382,7 @@ def minhash_lsh_candidates(
       better handled by exact_dedup on the band key. It also bounds the
       collected struct array at max_bucket * (8 + 8*n_hashes) bytes
       (~0.5 MiB at the defaults) — no group-row blowup;
-    - ``cache_signatures`` is retained for API compatibility but unused:
-      the single-consumer pipeline needs no persist (and leaks none).
+    - the single-consumer pipeline needs no persist (and leaks none).
     """
     rows_per_band = n_hashes // bands
     # signature via explode + single-pass hashing: computing the n_hashes
@@ -401,225 +471,119 @@ def minhash_lsh_candidates(
     # per-bucket conversion cost more than the math.
     # The winning shape keeps rows FLAT (Arrow-native list<int64>
     # columns): hash-repartition by bucket key, sort within partitions,
-    # and scan group runs inside the pandas batches (carrying a split
-    # group across batch boundaries — one partition's batches stream in
-    # order). Same single shuffle as a collect_list would cost.
-    import numpy as np
-    import pandas as pd
-
+    # and scan bucket runs inside the pandas batches (_bucket_pairs).
+    # Same single shuffle as a collect_list would cost.
     id_type = df.schema[id_col].dataType.simpleString()
     cols = ["id_a", "id_b", "est_jaccard"] + (
         ["jaccard"] if exact_verify else [])
     out_schema = f"id_a {id_type}, id_b {id_type}, est_jaccard double" + (
         ", jaccard double" if exact_verify else "")
-    thr = threshold
-    cap = max_bucket
-    do_verify = exact_verify
-    est_cut = min_est
-    # resolved at plan-build time on the driver (a closed-over value):
-    # executor python workers snapshot their environment at JVM launch,
-    # so a worker-side os.environ read would ignore later driver-side
-    # configuration changes
-    dense_bytes = _dense_verify_bytes()
+    # read at plan-build time: the closure ships the value to the tasks
+    dense_bytes = DENSE_VERIFY_BYTES
     npart = df.sparkSession.sparkContext.defaultParallelism
     flat = (banded
             .repartition(npart, "__k")
             .sortWithinPartitions("__k"))
 
-    def bucket_pairs(batches):
-        # fully vectorized bucket scan (r6; same shape as the simhash and
-        # ngram scans): bucket boundaries fall out of one array compare
-        # over the sorted partition, same-size buckets emit their pair
-        # triangles through one fancy-index gather per distinct size, and
-        # the pairwise signature agreement is one batched equals/mean.
-        # With exact_verify the per-pair set intersections pick one of
-        # two exact plans per emit slice:
+    def load(pdf):
+        arrays = {"k": pdf["__k"].to_numpy(), "id": pdf["__id"].to_numpy(),
+                  "sig": pdf[hcols].to_numpy(),
+                  "band": pdf["__band"].to_numpy()}
+        if exact_verify:
+            arrays["sets"] = pdf["__shs"].to_numpy()
+        return arrays
+
+    def jaccards(a, ia, ib, sel):
+        # Exact Jaccard per pair (``sel``: the rows of the emit slice's
+        # buckets); |A∩B| comes from one of two plans per emit slice:
         # * DENSE INCIDENCE (small shingle universe): factorize the
         #   slice's postings (pd.factorize — hash table, no sort), build
         #   a (kept-rows x universe) uint8 incidence matrix by one fancy
         #   assignment, and |A∩B| is a chunked AND-sum over pair rows.
         #   Measured 0.32 s vs 3.0 s for the posting-triangle scan on
         #   one sf1.0 bench partition (12.3k rows, U=2059, 88.5k pairs),
-        #   identical counts. Gated by rows*U <= TENZIR_SPARK_DENSE_
-        #   VERIFY_BYTES (default 64 MB per task).
+        #   identical counts. Gated by rows*U <= DENSE_VERIFY_BYTES.
         # * POSTING TRIANGLES (at-scale universe, e.g. real text where
-        #   U ~ total postings): explode every kept bucket's (member,
+        #   U ~ total postings): explode every bucket's (member,
         #   shingle-hash) rows, lexsort by (bucket, hash, member), emit
         #   the per-hash member triangles, and np.unique-count them into
         #   sparse |A∩B| — all C loops; the previous per-row append +
         #   per-pair Python set-intersect was the stage's dominant cost
         #   (3.7M candidate pairs at the sf1.0 bench corpus).
-        c_k = None
-        c_ids = c_sigm = c_sets = c_band = None
+        sets = a["sets"]
+        n_rows = len(sets)
+        lens = np.fromiter((len(x) for x in sets), dtype=np.int64,
+                           count=n_rows)
+        elems = np.concatenate(list(sets[sel]))
+        inter = np.zeros(len(ia), dtype=np.int64)
+        # dense-incidence attempt: factorize is a hash table (no sort),
+        # so probing the universe size costs ~a third of the fallback's
+        # lexsort even when the gate then rejects the dense plan
+        codes, uu = pd.factorize(elems)
+        nu = len(uu)
+        if len(sel) * nu <= dense_bytes:
+            rowmap = np.full(n_rows, -1, dtype=np.int64)
+            rowmap[sel] = np.arange(len(sel))
+            m = np.zeros((len(sel), nu), dtype=np.uint8)
+            m[np.repeat(np.arange(len(sel)), lens[sel]), codes] = 1
+            ra, rb = rowmap[ia], rowmap[ib]
+            step = max(1, 16_000_000 // max(nu, 1))
+            for s0 in range(0, len(ia), step):
+                s1 = min(s0 + step, len(ia))
+                inter[s0:s1] = (m[ra[s0:s1]] & m[rb[s0:s1]]
+                                ).sum(axis=1, dtype=np.int64)
+        else:
+            owners = np.repeat(sel, lens[sel])
+            owner_bucket = np.repeat(a["k"][sel], lens[sel])
+            # two sort keys suffice: owners arrive ascending within each
+            # bucket (postings are emitted in sel order) and lexsort is
+            # stable, so owners stay ascending within every (bucket,
+            # elem) group without a third pass
+            order = np.lexsort((elems, owner_bucket))
+            oe, oo, ob = elems[order], owners[order], owner_bucket[order]
+            gst = np.flatnonzero(np.concatenate(
+                [[True], (oe[1:] != oe[:-1]) | (ob[1:] != ob[:-1])]))
+            ga, gb = _triangles(gst, np.diff(np.append(gst, len(oe))))
+            if len(ga):
+                uniq, cnt = np.unique(oo[ga] * n_rows + oo[gb],
+                                      return_counts=True)
+                pk = ia * n_rows + ib
+                pos = np.minimum(np.searchsorted(uniq, pk), len(uniq) - 1)
+                inter = np.where(uniq[pos] == pk, cnt[pos], 0)
+        union = lens[ia] + lens[ib] - inter
+        return np.where(union > 0, inter / np.maximum(union, 1), 0.0)
 
-        def emit(idv, sigm, sets, bandv, starts, sizes):
-            ia_l, ib_l = [], []
-            for m in np.unique(sizes):
-                st = starts[sizes == m]
-                iu, ju = np.triu_indices(int(m), 1)
-                ia_l.append((st[:, None] + iu[None, :]).ravel())
-                ib_l.append((st[:, None] + ju[None, :]).ravel())
-            if not ia_l:
-                return None
-            ia = np.concatenate(ia_l)
-            ib = np.concatenate(ib_l)
-            eq = sigm[ia] == sigm[ib]
+    def bucket_pairs(batches):
+        # the pairwise signature agreement is one batched equals/mean per
+        # emit slice; the bound is scaled by signature width (each pair
+        # gathers two n_hashes-wide int64 signature rows)
+        for a, ia, ib in _bucket_pairs(
+                batches, load, "k", max_bucket,
+                max_pairs=max(1_000_000, 16_000_000 // max(n_hashes, 1))):
+            if exact_verify:
+                rows = np.zeros(len(a["k"]), dtype=bool)
+                rows[ia] = rows[ib] = True
+                sel = np.flatnonzero(rows)
+            eq = a["sig"][ia] == a["sig"][ib]
             est = eq.mean(axis=1)
-            # FIRST-COLLIDING-BAND emission: each pair leaves the scan
-            # exactly once — from the lowest band whose signature slices
-            # truly match — so the result is distinct by construction and
-            # the cross-band dropDuplicates exchange is gone (guide §2.4).
-            # This also requires a REAL slice match: a pair thrown
-            # together only by a 2^-64 xxhash64 bucket-key collision is
-            # dropped, which is exactly the oracle's candidate definition
-            # (its banded join compares the slices themselves).
-            # only the first bands*rows_per_band hashes participate in
-            # banding (a non-divisible n_hashes leaves a tail that still
-            # contributes to the estimate, but never to candidacy)
-            eqb = eq[:, :bands * rows_per_band] \
-                .reshape(len(ia), bands, rows_per_band).all(axis=2)
-            once = eqb.any(axis=1) & (eqb.argmax(axis=1) == bandv[ia])
-            if not once.any():
-                return None
-            ia, ib, est = ia[once], ib[once], est[once]
-            if est_cut is not None:
-                keep_e = est >= est_cut
-                if not keep_e.any():
-                    return None
-                ia, ib, est = ia[keep_e], ib[keep_e], est[keep_e]
-            data: dict = {}
-            if do_verify:
-                n_rows = len(idv)
-                # rows belonging to kept buckets, with their bucket ord
-                total = int(sizes.sum())
-                sel = (np.repeat(starts, sizes)
-                       + np.arange(total)
-                       - np.repeat(np.cumsum(sizes) - sizes, sizes))
-                lens_all = np.fromiter((len(s) for s in sets),
-                                       dtype=np.int64, count=n_rows)
-                elems = (np.concatenate(list(sets[sel]))
-                         if total else np.empty(0, dtype=np.int64))
-                inter = None
-                if len(elems):
-                    # dense-incidence attempt: factorize is a hash
-                    # table (no sort), so probing the universe size
-                    # costs ~a third of the fallback's lexsort even
-                    # when the gate then rejects the dense plan
-                    codes, uu = pd.factorize(elems)
-                    nu = len(uu)
-                    if len(sel) * nu <= dense_bytes:
-                        rowmap = np.full(n_rows, -1, dtype=np.int64)
-                        rowmap[sel] = np.arange(len(sel))
-                        m = np.zeros((len(sel), nu), dtype=np.uint8)
-                        m[np.repeat(np.arange(len(sel)),
-                                    lens_all[sel]), codes] = 1
-                        ra, rb = rowmap[ia], rowmap[ib]
-                        inter = np.empty(len(ia), dtype=np.int64)
-                        step = max(1, 16_000_000 // max(nu, 1))
-                        for s0 in range(0, len(ia), step):
-                            s1 = min(s0 + step, len(ia))
-                            inter[s0:s1] = (m[ra[s0:s1]] & m[rb[s0:s1]]
-                                            ).sum(axis=1, dtype=np.int64)
-                if inter is None and len(elems):
-                    bucket_of = np.repeat(np.arange(len(starts)), sizes)
-                    owners = np.repeat(sel, lens_all[sel])
-                    owner_bucket = np.repeat(bucket_of, lens_all[sel])
-                    # two sort keys suffice: owners arrive ascending
-                    # within each bucket (postings are emitted in sel
-                    # order) and lexsort is stable, so owners stay
-                    # ascending within every (bucket, elem) group
-                    # without a third pass
-                    order = np.lexsort((elems, owner_bucket))
-                    oe, oo = elems[order], owners[order]
-                    ob = owner_bucket[order]
-                    chg = np.flatnonzero((oe[1:] != oe[:-1])
-                                         | (ob[1:] != ob[:-1])) + 1
-                    gst = np.concatenate([[0], chg]).astype(np.int64)
-                    gsz = np.diff(np.concatenate([gst, [len(oe)]]))
-                    pk_l = []
-                    for g in np.unique(gsz):
-                        if g < 2:
-                            continue
-                        s2 = gst[gsz == g]
-                        iu, ju = np.triu_indices(int(g), 1)
-                        oa = oo[(s2[:, None] + iu[None, :]).ravel()]
-                        obv = oo[(s2[:, None] + ju[None, :]).ravel()]
-                        pk_l.append(oa * n_rows + obv)
-                    pk = ia * n_rows + ib
-                    inter = np.zeros(len(pk), dtype=np.int64)
-                    if pk_l:
-                        allpk = np.concatenate(pk_l)
-                        uniq, cnt = np.unique(allpk, return_counts=True)
-                        pos = np.searchsorted(uniq, pk)
-                        pos_c = np.minimum(pos, len(uniq) - 1)
-                        found = uniq[pos_c] == pk
-                        inter = np.where(found, cnt[pos_c], 0)
-                elif inter is None:
-                    inter = np.zeros(len(ia), dtype=np.int64)
-                union = lens_all[ia] + lens_all[ib] - inter
-                jac = np.where(union > 0, inter / np.maximum(union, 1), 0.0)
-                keep = jac >= thr
-                if not keep.any():
-                    return None
-                ia, ib, est, jac = ia[keep], ib[keep], est[keep], jac[keep]
-                data["jaccard"] = jac
-            ai, bj = idv[ia], idv[ib]
-            swap = bj < ai
-            out = {"id_a": np.where(swap, bj, ai),
-                   "id_b": np.where(swap, ai, bj),
-                   "est_jaccard": est}
-            out.update(data)
-            return pd.DataFrame(out)
-
-        for pdf in batches:
-            if not len(pdf):
+            keep = _first_band_mask(eq, a["band"][ia], a["band"][ib],
+                                    bands, rows_per_band)
+            if min_est is not None:
+                keep &= est >= min_est
+            ia, ib, est = ia[keep], ib[keep], est[keep]
+            out = {}
+            if exact_verify and len(ia):
+                jac = jaccards(a, ia, ib, sel)
+                keep = jac >= threshold
+                ia, ib, est, out["jaccard"] = (
+                    ia[keep], ib[keep], est[keep], jac[keep])
+            if not len(ia):
                 continue
-            kv = pdf["__k"].to_numpy()
-            idv = pdf["__id"].to_numpy()
-            sigm = pdf[hcols].to_numpy()
-            bandv = pdf["__band"].to_numpy()
-            sets = pdf["__shs"].to_numpy() if do_verify else None
-            if c_k is not None:
-                if kv[0] == c_k:
-                    # carry bucket continues into this batch
-                    kv = np.concatenate(
-                        [np.full(len(c_ids), c_k, dtype=kv.dtype), kv])
-                    idv = np.concatenate([c_ids, idv])
-                    sigm = np.vstack([c_sigm, sigm])
-                    bandv = np.concatenate([c_band, bandv])
-                    if do_verify:
-                        sets = np.concatenate([c_sets, sets])
-                elif 2 <= len(c_ids) <= cap:
-                    out = emit(c_ids, c_sigm, c_sets, c_band, np.array([0]),
-                               np.array([len(c_ids)]))
-                    if out is not None:
-                        yield out
-            bnd = np.flatnonzero(kv[1:] != kv[:-1]) + 1
-            starts = np.concatenate([[0], bnd]).astype(np.int64)
-            ends = np.concatenate([bnd, [len(kv)]]).astype(np.int64)
-            # last bucket may continue into the next Arrow batch -> carry
-            c_k = kv[-1]
-            c_ids, c_sigm = idv[starts[-1]:], sigm[starts[-1]:]
-            c_band = bandv[starts[-1]:]
-            c_sets = sets[starts[-1]:] if do_verify else None
-            starts, ends = starts[:-1], ends[:-1]
-            sizes = ends - starts
-            keep_b = (sizes >= 2) & (sizes <= cap)
-            if keep_b.any():
-                # bound scaled by signature width: each pair gathers two
-                # n_hashes-wide int64 signature rows for the est compare
-                for st_sl, sz_sl in _pair_bounded_slices(
-                        starts[keep_b], sizes[keep_b],
-                        max_pairs=max(1_000_000,
-                                      16_000_000 // max(n_hashes, 1))):
-                    out = emit(idv, sigm, sets, bandv, st_sl, sz_sl)
-                    if out is not None:
-                        yield out
-        if c_k is not None and 2 <= len(c_ids) <= cap:
-            out = emit(c_ids, c_sigm, c_sets, c_band, np.array([0]),
-                       np.array([len(c_ids)]))
-            if out is not None:
-                yield out
+            ai, bj = a["id"][ia], a["id"][ib]
+            swap = bj < ai
+            yield pd.DataFrame({"id_a": np.where(swap, bj, ai),
+                                "id_b": np.where(swap, ai, bj),
+                                "est_jaccard": est, **out})
         # empty frame so Arrow sees the declared columns even when a
         # partition emits nothing (ids stay object-dtyped: the declared
         # id type may be string or numeric)
@@ -709,7 +673,6 @@ def near_dup_pairs(
     seed: int = 1,
     hash_family: str = "xxhash64",
     max_bucket: int = 1024,
-    cache_candidates: bool = True,
     verify: str = "inline",
 ) -> DataFrame:
     """The DEFAULT near-duplicate pipeline: MinHash+LSH candidate
@@ -735,14 +698,11 @@ def near_dup_pairs(
       stages + a persist barrier, but shuffle volume is O(candidate
       docs), independent of corpus size — the right trade when docs are
       long (a 100 KiB doc's shingle set dwarfs its 512-byte signature)
-      or duplicates are rare.
-
-    ``cache_candidates`` (join path only) persists AND eagerly
-    materializes the candidate-pair frame: the verifier consumes it from
-    three plan branches which would otherwise each re-run the whole
-    signature pipeline — lazy persist alone doesn't help because AQE
-    schedules the branches concurrently, racing ahead of cache
-    population."""
+      or duplicates are rare. The candidate frame is materialized
+      once: the verifier consumes it from three plan branches which
+      would otherwise each re-run the whole signature pipeline — lazy
+      persist alone doesn't help because AQE schedules the branches
+      concurrently, racing ahead of cache population."""
     if verify == "inline":
         return minhash_lsh_candidates(
             df, id_col, text_col, n_hashes=n_hashes, bands=bands,
@@ -754,19 +714,16 @@ def near_dup_pairs(
         df, id_col, text_col, n_hashes=n_hashes, bands=bands,
         shingle_k=shingle_k, seed=seed, hash_family=hash_family,
         max_bucket=max_bucket)
-    if cache_candidates:
-        # materialize once before the three verify branches race (lazy
-        # persist alone loses to AQE's concurrent stage scheduling) —
-        # eager localCheckpoint: blocks live on the executors that
-        # computed them (cluster-correct; the earlier parquet spool
-        # wrote to a driver-local tmpdir, which on a non-local master
-        # lands parts on executor disks the driver can't read) and are
-        # reaped by ContextCleaner when this frame is GC'd (the suite's
-        # no-leaked-persists teardown GC-polls for exactly that).
-        # Tradeoff: checkpoint blocks are non-replicated, so an executor
-        # loss fails the query instead of recomputing — acceptable for a
-        # candidate frame that is tiny relative to the corpus.
-        cand = cand.localCheckpoint(eager=True)
+    # eager localCheckpoint: blocks live on the executors that computed
+    # them (cluster-correct; the earlier parquet spool wrote to a tmpdir
+    # local to the planning process, which on a non-local master lands
+    # parts on executor disks that process can't read) and are reaped by
+    # ContextCleaner when this frame is GC'd (the suite's
+    # no-leaked-persists teardown GC-polls for exactly that). Tradeoff:
+    # checkpoint blocks are non-replicated, so an executor loss fails the
+    # query instead of recomputing — acceptable for a candidate frame
+    # that is tiny relative to the corpus.
+    cand = cand.localCheckpoint(eager=True)
     return verify_jaccard_pairs(df, id_col, text_col, cand,
                                 k=shingle_k, use_words=False,
                                 threshold=threshold)
@@ -819,9 +776,6 @@ def ngram_jaccard_pairs(
                                    threshold=threshold)
         return out.select("id_a", "id_b", "jaccard")
 
-    import numpy as np
-    import pandas as pd
-
     # Two shuffles total:
     # 1. explode (gram, id, n) rows — per-doc set size n computed as
     #    size(arr) NEXT TO the generator in one projection, so there is
@@ -830,7 +784,7 @@ def ngram_jaccard_pairs(
     #    an index self-join — six-plus stages of fixed cost for the same
     #    arithmetic);
     # 2. posting lists scanned flat (repartition + sortWithinPartitions
-    #    by gram; same pattern as the minhash/simhash bucket scan) emit
+    #    by gram, walked by the shared _bucket_pairs kernel) emit
     #    one (id_a, id_b, n_a, n_b) row per SHARED gram, and a groupBy
     #    pair counts them — count == |A ∩ B| because shingle sets are
     #    distinct. The posting cap drops grams shared by more docs than
@@ -871,8 +825,6 @@ def ngram_jaccard_pairs(
         .select("__id", "__n", F.xxhash64("__g").alias("__g"))
     )
     id_type = df.schema[id_col].dataType.simpleString()
-    cap = max_gram_docs
-    thr = threshold
 
     # ---- plan choice: broadcast index vs posting scan ----------------
     # total chars (from the probe above) upper-bounds the distinct gram
@@ -882,96 +834,35 @@ def ngram_jaccard_pairs(
     est_postings = int(est["chars"]) // (2 if use_words else 1)
     if est_postings * 16 <= index_broadcast_bytes and int(est["n"]) > 0:
         return _ngram_jaccard_broadcast(
-            df.sparkSession, base, ex, id_type, threshold, cap, npart)
+            df.sparkSession, base, ex, id_type, threshold, max_gram_docs,
+            npart)
 
     flat = (ex.repartition(npart, "__g").sortWithinPartitions("__g"))
 
+    def load(pdf):
+        return {"g": pdf["__g"].to_numpy(), "id": pdf["__id"].to_numpy(),
+                "n": pdf["__n"].to_numpy()}
+
     def gram_pairs(batches):
-        # fully vectorized posting-list scan: the partition arrives
-        # sorted by __g, so group boundaries fall out of one array
-        # compare, and all same-size groups emit their pair triangles
-        # through ONE fancy-index gather per distinct size (group sizes
-        # cluster tightly — 2, 3, 4... — so the Python loop runs a
-        # handful of times per batch, never once per posting row; the
-        # previous per-row scan was the partition's only O(rows) Python
-        # and dominated the stage)
-        c_ids = c_ns = None  # rows of the gram spanning a batch boundary
-        c_g = None
-
-        def triangles(idv, nv, starts, sizes):
-            cols_a, cols_b, cols_na, cols_nb = [], [], [], []
-            for m in np.unique(sizes):
-                st = starts[sizes == m]
-                iu, ju = np.triu_indices(int(m), 1)
-                ia = (st[:, None] + iu[None, :]).ravel()
-                ib = (st[:, None] + ju[None, :]).ravel()
-                ai, bj = idv[ia], idv[ib]
-                na, nb = nv[ia], nv[ib]
-                if thr > 0:
-                    # exact length-ratio pruning (see the broadcast
-                    # plan's block scan): a pair more size-skewed than
-                    # thr can never reach jac >= thr — drop its rows
-                    # before the pair-count shuffle. Consistent per
-                    # pair, so every instance drops together.
-                    kp = (np.minimum(na, nb)
-                          >= thr * np.maximum(na, nb) - 1)
-                    if not kp.any():
-                        continue
-                    ai, bj, na, nb = ai[kp], bj[kp], na[kp], nb[kp]
-                swap = bj < ai
-                cols_a.append(np.where(swap, bj, ai))
-                cols_b.append(np.where(swap, ai, bj))
-                cols_na.append(np.where(swap, nb, na))
-                cols_nb.append(np.where(swap, na, nb))
-            if not cols_a:
-                return None
-            return (np.concatenate(cols_a), np.concatenate(cols_b),
-                    np.concatenate(cols_na), np.concatenate(cols_nb))
-
-        def frame(tri):
-            return pd.DataFrame({"id_a": tri[0], "id_b": tri[1],
-                                 "n_a": tri[2], "n_b": tri[3]})
-
-        for pdf in batches:
-            if not len(pdf):
+        for a, ia, ib in _bucket_pairs(batches, load, "g", max_gram_docs):
+            ai, bj = a["id"][ia], a["id"][ib]
+            na, nb = a["n"][ia], a["n"][ib]
+            if threshold > 0:
+                # exact length-ratio pruning (see the broadcast plan's
+                # block scan): a pair more size-skewed than the threshold
+                # can never reach it — drop its rows before the pair-count
+                # shuffle. Consistent per pair, so every instance drops
+                # together.
+                kp = (np.minimum(na, nb)
+                      >= threshold * np.maximum(na, nb) - 1)
+                ai, bj, na, nb = ai[kp], bj[kp], na[kp], nb[kp]
+            if not len(ai):
                 continue
-            gv = pdf["__g"].to_numpy()
-            idv = pdf["__id"].to_numpy()
-            nv = pdf["__n"].to_numpy()
-            if c_g is not None:
-                if gv[0] == c_g:  # carry gram continues into this batch
-                    idv = np.concatenate([c_ids, idv])
-                    nv = np.concatenate([c_ns, nv])
-                    gv = np.concatenate(
-                        [np.full(len(c_ids), c_g, dtype=gv.dtype), gv])
-                else:
-                    tri = triangles(c_ids, c_ns, np.array([0]),
-                                    np.array([len(c_ids)])) \
-                        if 2 <= len(c_ids) <= (cap or len(c_ids)) else None
-                    if tri is not None:
-                        yield frame(tri)
-            bnd = np.flatnonzero(gv[1:] != gv[:-1]) + 1
-            starts = np.concatenate([[0], bnd]).astype(np.int64)
-            ends = np.concatenate([bnd, [len(gv)]]).astype(np.int64)
-            # last group may continue into the next Arrow batch -> carry
-            c_g, c_ids, c_ns = gv[-1], idv[starts[-1]:], nv[starts[-1]:]
-            starts, ends = starts[:-1], ends[:-1]
-            sizes = ends - starts
-            keep = sizes >= 2
-            if cap is not None:
-                keep &= sizes <= cap
-            if keep.any():
-                for st_sl, sz_sl in _pair_bounded_slices(starts[keep],
-                                                         sizes[keep]):
-                    tri = triangles(idv, nv, st_sl, sz_sl)
-                    if tri is not None:
-                        yield frame(tri)
-        if c_g is not None and len(c_ids) >= 2 and \
-                (cap is None or len(c_ids) <= cap):
-            tri = triangles(c_ids, c_ns, np.array([0]),
-                            np.array([len(c_ids)]))
-            if tri is not None:
-                yield frame(tri)
+            swap = bj < ai
+            yield pd.DataFrame({"id_a": np.where(swap, bj, ai),
+                                "id_b": np.where(swap, ai, bj),
+                                "n_a": np.where(swap, nb, na),
+                                "n_b": np.where(swap, na, nb)})
 
     inter = (flat.mapInPandas(
                 gram_pairs,
@@ -1250,9 +1141,6 @@ def simhash_near_dups(df: DataFrame, id_col: str, text_col: str,
     # threaded). Here rows stay flat (Arrow-native), hash-partitioned +
     # sorted by bucket key, and each bucket's pairwise XOR/popcount is
     # one vectorized numpy triangle — same single shuffle.
-    import numpy as np
-    import pandas as pd
-
     id_type = df.schema[id_col].dataType.simpleString()
     npart = df.sparkSession.sparkContext.defaultParallelism
     # one packed bucket key (band << band_bits | bhash): fewer shuffle
@@ -1266,108 +1154,42 @@ def simhash_near_dups(df: DataFrame, id_col: str, text_col: str,
     # 16-bit popcount table: 4 gathers per xor vs 8 with a byte table
     _POP16 = np.array([bin(i).count("1") for i in range(65536)],
                       dtype=np.uint16)
-    ham_cut = max_hamming
+    band_mask = np.uint64((1 << band_bits) - 1)
+
+    def load(pdf):
+        return {"k": pdf["__k"].to_numpy(), "id": pdf["__id"].to_numpy(),
+                "sh": pdf["__sh"].to_numpy().astype(np.int64)}
 
     def bucket_pairs(batches):
-        # fully vectorized bucket scan (same shape as the ngram posting
-        # scan): the partition arrives sorted by bucket key, so group
-        # boundaries fall out of one array compare, and all same-size
-        # groups emit their pair triangles through ONE fancy-index gather
-        # per distinct size — no per-row Python. The previous per-row
-        # append/flush loop was the stage's only O(rows) Python and,
-        # with a multi-million-pair degenerate bucket, its per-element
-        # .tolist()/extend dominated the stage.
-        c_ids = c_shs = None  # rows of a bucket spanning a batch boundary
-        c_k = None
-        band_mask = np.uint64((1 << band_bits) - 1)
-
-        def triangles(idv, shv, kb, starts, sizes):
-            outs = []
-            for m in np.unique(sizes):
-                st = starts[sizes == m]
-                iu, ju = np.triu_indices(int(m), 1)
-                ia = (st[:, None] + iu[None, :]).ravel()
-                ib = (st[:, None] + ju[None, :]).ravel()
-                x = (shv[ia] ^ shv[ib]).astype(np.uint64)
-                # FIRST-COLLIDING-BAND emission (guide §2.4): the packed
-                # bucket key carries the band index, bands are EXACT bit
-                # slices (no hashing), and a pair agrees on band c iff
-                # that 16-bit slice of the xor is zero — so each pair is
-                # emitted only from its lowest agreeing band and the
-                # cross-band dropDuplicates exchange is gone. The
-                # bucket's own band always agrees by construction.
-                first = np.full(len(x), n_bands, dtype=np.int64)
-                for c in range(n_bands - 1, -1, -1):
-                    agree = ((x >> np.uint64(c * band_bits))
-                             & band_mask) == 0
-                    first = np.where(agree, c, first)
-                keep = first == kb[ia]
-                if not keep.any():
-                    continue
-                ia, ib, x = ia[keep], ib[keep], x[keep]
-                ham = (_POP16[(x & np.uint64(0xFFFF)).astype(np.int64)]
-                       + _POP16[((x >> np.uint64(16)) & np.uint64(0xFFFF)).astype(np.int64)]
-                       + _POP16[((x >> np.uint64(32)) & np.uint64(0xFFFF)).astype(np.int64)]
-                       + _POP16[(x >> np.uint64(48)).astype(np.int64)]
-                       ).astype(np.int64)
-                if ham_cut is not None:
-                    keep = ham <= ham_cut
-                    if not keep.any():
-                        continue
-                    ia, ib, ham = ia[keep], ib[keep], ham[keep]
-                ai, bj = idv[ia], idv[ib]
-                swap = bj < ai
-                outs.append((np.where(swap, bj, ai), np.where(swap, ai, bj),
-                             ham))
-            if not outs:
-                return None
-            return pd.DataFrame(
-                {"id_a": np.concatenate([o[0] for o in outs]),
-                 "id_b": np.concatenate([o[1] for o in outs]),
-                 "hamming": np.concatenate([o[2] for o in outs])})
-
-        for pdf in batches:
-            if not len(pdf):
+        for a, ia, ib in _bucket_pairs(batches, load, "k", max_bucket):
+            x = (a["sh"][ia] ^ a["sh"][ib]).astype(np.uint64)
+            # FIRST-COLLIDING-BAND emission: the packed bucket key
+            # carries the band index, bands are EXACT bit slices (no
+            # hashing), and a pair agrees on band c iff that slice of the
+            # xor is zero — so each pair is emitted only from its lowest
+            # agreeing band and the cross-band dropDuplicates exchange is
+            # gone. The bucket's own band always agrees by construction.
+            first = np.full(len(x), n_bands, dtype=np.int64)
+            for c in range(n_bands - 1, -1, -1):
+                agree = ((x >> np.uint64(c * band_bits)) & band_mask) == 0
+                first = np.where(agree, c, first)
+            keep = first == (a["k"][ia] >> band_bits)
+            ia, ib, x = ia[keep], ib[keep], x[keep]
+            ham = (_POP16[(x & np.uint64(0xFFFF)).astype(np.int64)]
+                   + _POP16[((x >> np.uint64(16)) & np.uint64(0xFFFF)).astype(np.int64)]
+                   + _POP16[((x >> np.uint64(32)) & np.uint64(0xFFFF)).astype(np.int64)]
+                   + _POP16[(x >> np.uint64(48)).astype(np.int64)]
+                   ).astype(np.int64)
+            if max_hamming is not None:
+                keep = ham <= max_hamming
+                ia, ib, ham = ia[keep], ib[keep], ham[keep]
+            if not len(ia):
                 continue
-            kv = pdf["__k"].to_numpy()
-            idv = pdf["__id"].to_numpy()
-            shv = pdf["__sh"].to_numpy().astype(np.int64)
-            kb = (kv >> band_bits).astype(np.int64)  # band of the bucket
-            if c_k is not None:
-                if kv[0] == c_k:  # carry bucket continues into this batch
-                    idv = np.concatenate([c_ids, idv])
-                    shv = np.concatenate([c_shs, shv])
-                    kv = np.concatenate(
-                        [np.full(len(c_ids), c_k, dtype=kv.dtype), kv])
-                    kb = (kv >> band_bits).astype(np.int64)
-                elif 2 <= len(c_ids) <= max_bucket:
-                    c_kb = np.full(len(c_ids), int(c_k) >> band_bits,
-                                   dtype=np.int64)
-                    out = triangles(c_ids, c_shs, c_kb, np.array([0]),
-                                    np.array([len(c_ids)]))
-                    if out is not None:
-                        yield out
-            bnd = np.flatnonzero(kv[1:] != kv[:-1]) + 1
-            starts = np.concatenate([[0], bnd]).astype(np.int64)
-            ends = np.concatenate([bnd, [len(kv)]]).astype(np.int64)
-            # last bucket may continue into the next Arrow batch -> carry
-            c_k, c_ids, c_shs = kv[-1], idv[starts[-1]:], shv[starts[-1]:]
-            starts, ends = starts[:-1], ends[:-1]
-            sizes = ends - starts
-            keep = (sizes >= 2) & (sizes <= max_bucket)
-            if keep.any():
-                for st_sl, sz_sl in _pair_bounded_slices(starts[keep],
-                                                         sizes[keep]):
-                    out = triangles(idv, shv, kb, st_sl, sz_sl)
-                    if out is not None:
-                        yield out
-        if c_k is not None and 2 <= len(c_ids) <= max_bucket:
-            c_kb = np.full(len(c_ids), int(c_k) >> band_bits,
-                           dtype=np.int64)
-            out = triangles(c_ids, c_shs, c_kb, np.array([0]),
-                            np.array([len(c_ids)]))
-            if out is not None:
-                yield out
+            ai, bj = a["id"][ia], a["id"][ib]
+            swap = bj < ai
+            yield pd.DataFrame({"id_a": np.where(swap, bj, ai),
+                                "id_b": np.where(swap, ai, bj),
+                                "hamming": ham})
 
     # distinct by construction (first-colliding-band emission) — no
     # cross-band dropDuplicates exchange

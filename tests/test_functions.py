@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import math
 
+import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import Row
@@ -172,8 +173,8 @@ def test_near_dup_dense_verify_equals_posting_scan(spark, sf_dir,
     """The r6 dense-incidence exact-verify plan and the posting-triangle
     fallback are two physical executions of the same |A∩B| — pin their
     equality (pairs AND jaccard values) on the real fixture corpus.
-    The gate is resolved at plan-build time on the driver, so the env
-    override below genuinely switches the executed plan."""
+    The gate is read when the plan is built, so the override below
+    genuinely switches the executed plan."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     kw = dict(n_hashes=32, bands=8, shingle_k=5, threshold=0.5,
               hash_family="md5", verify="inline")
@@ -182,9 +183,106 @@ def test_near_dup_dense_verify_equals_posting_scan(spark, sf_dir,
         return sorted((r.id_a, r.id_b, round(r.est_jaccard, 9),
                        round(r.jaccard, 9)) for r in p.collect())
     dense = rows(dedup.near_dup_pairs(docs, "doc_id", "text", **kw))
-    monkeypatch.setenv("TENZIR_SPARK_DENSE_VERIFY_BYTES", "0")
+    monkeypatch.setattr(dedup, "DENSE_VERIFY_BYTES", 0)
     posting = rows(dedup.near_dup_pairs(docs, "doc_id", "text", **kw))
     assert dense and dense == posting
+
+
+@pytest.mark.parametrize("cap", [None, 0, 1, 2, 5])
+def test_bucket_pairs_kernel_is_split_invariant(cap):
+    """The shared bucket-scan kernel yields the same pair set however the
+    Arrow batches split the sorted partition (the carry invariant), and
+    applies one cap rule, 2 <= run size <= cap, to every run — carried or
+    not (the n-gram scan's old carry flush let a cap of 0 through)."""
+    rng = np.random.default_rng(11)
+    keys = np.sort(rng.integers(0, 12, size=40))
+    n = len(keys)
+    whole = pd.DataFrame({"k": keys, "row": np.arange(n)})
+
+    def load(pdf):
+        return {"k": pdf["k"].to_numpy(), "row": pdf["row"].to_numpy()}
+
+    def pairs(batches, max_pairs=16_000_000):
+        got = []
+        for a, ia, ib in dedup._bucket_pairs(iter(batches), load, "k", cap,
+                                             max_pairs):
+            got += zip(a["row"][ia].tolist(), a["row"][ib].tolist())
+        assert len(got) == len(set(got))
+        return sorted(got)
+
+    size = np.bincount(keys)
+    want = sorted((i, j) for i in range(n) for j in range(i + 1, n)
+                  if keys[i] == keys[j]
+                  and (cap is None or size[keys[i]] <= cap))
+    assert pairs([whole]) == want
+    for cut in range(1, n):
+        assert pairs([whole[:cut], whole[cut:]]) == want, cut
+    # every boundary at once, with empty batches between them, and a
+    # one-pair emission bound
+    singles = [b for i in range(n) for b in (whole[i:i + 1], whole[:0])]
+    assert pairs(singles) == want
+    assert pairs(singles, max_pairs=1) == want
+    for _ in range(20):
+        cuts = [0, *sorted(rng.choice(np.arange(1, n), 5, replace=False)), n]
+        assert pairs([whole[a:b] for a, b in zip(cuts, cuts[1:])],
+                     max_pairs=3) == want
+    if cap is None:
+        assert want
+
+
+def test_first_band_mask_guards_cross_band_key_collision():
+    """A bucket-key collision across bands puts the band-0 row AND the
+    band-2 row of doc y into the band-0 bucket of (x, y). Only the
+    same-band row pair may emit: without the band-equality guard, (x, y)
+    leaves the bucket twice and y pairs with itself."""
+    sig_x = np.array([1, 2, 3, 4, 5, 6])
+    sig_y = np.array([1, 2, 7, 8, 9, 10])  # agrees with x on band 0 only
+    doc = np.array(["x", "y", "y"])
+    sig = np.stack([sig_x, sig_y, sig_y])
+    band = np.array([0, 0, 2])
+    ia, ib = dedup._triangles(np.array([0]), np.array([3]))
+    keep = dedup._first_band_mask(sig[ia] == sig[ib], band[ia], band[ib],
+                                  bands=3, rows_per_band=2)
+    assert list(zip(doc[ia[keep]], doc[ib[keep]])) == [("x", "y")]
+
+
+_ARROW_BATCH_CASES = {
+    "minhash": dict(fn="minhash_lsh_candidates", n_hashes=32, bands=8,
+                    hash_family="md5"),
+    "minhash_verify": dict(fn="minhash_lsh_candidates", n_hashes=32,
+                           bands=8, hash_family="md5", exact_verify=True,
+                           threshold=0.3),
+    "ngram_posting": dict(fn="ngram_jaccard_pairs", k=3, threshold=0.5,
+                          index_broadcast_bytes=0),
+    "simhash": dict(fn="simhash_near_dups", band_bits=16),
+    "simhash_hamming": dict(fn="simhash_near_dups", band_bits=16,
+                            max_hamming=8),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_ARROW_BATCH_CASES))
+def test_near_dup_scans_equal_across_arrow_batches(spark, sf_dir, case):
+    """Every family's bucket scan gives the same rows, values included,
+    when each partition streams in 7-row Arrow batches — so runs split
+    across batches and the kernel's carry path runs — as with the
+    default one batch per partition."""
+    kw = dict(_ARROW_BATCH_CASES[case])
+    fn = getattr(dedup, kw.pop("fn"))
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+
+    def rows():
+        return sorted(tuple(round(v, 9) if isinstance(v, float) else v
+                            for v in r)
+                      for r in fn(docs, "doc_id", "text", **kw).collect())
+    want = rows()
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "7")
+    try:
+        got = rows()
+    finally:
+        spark.conf.set(conf, old)
+    assert want and got == want
 
 
 def test_simhash_near_dups(docs):
