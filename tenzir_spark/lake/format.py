@@ -250,22 +250,23 @@ def snapshot_at(root: str, version: int, io: LocalFileIO | None = None) -> Snaps
     return Snapshot.from_json(json.loads(io.read_bytes(_meta_path(root, version, io))))
 
 
-def latest_snapshot(root: str, io: LocalFileIO | None = None) -> Snapshot | None:
+def snapshot_versions(root: str, io: LocalFileIO | None = None) -> list[int]:
+    """The published snapshot versions of the table at ``root``,
+    ascending; empty when it has no meta directory."""
     io = io or DEFAULT_IO
     meta = io.join(root, META_DIR)
     if not io.is_dir(meta):
-        return None
-    versions = sorted(
-        int(n[1:9]) for n in io.list(meta)
-        if n.startswith("v") and n.endswith(".json")
-    )
-    if not versions:
-        return None
+        return []
+    return sorted(int(n[1:9]) for n in io.list(meta)
+                  if n.startswith("v") and n.endswith(".json"))
+
+
+def latest_snapshot(root: str, io: LocalFileIO | None = None) -> Snapshot | None:
     # defensively skip unparsable snapshot files (e.g. external tooling
     # damage) — commits publish atomically, so a valid one always exists
-    for v in reversed(versions):
+    for v in reversed(snapshot_versions(root, io)):
         try:
-            return Snapshot.from_json(json.loads(io.read_bytes(_meta_path(root, v, io))))
+            return snapshot_at(root, v, io)
         except (json.JSONDecodeError, KeyError):
             continue
     return None

@@ -9,6 +9,8 @@ from __future__ import annotations
 
 import time
 import uuid
+from collections.abc import Callable
+from dataclasses import replace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -22,8 +24,11 @@ from tenzir_spark.lake.format import (
     DataFile,
     LocalFileIO,
     Snapshot,
+    _meta_path,
     bucket_expr,
     latest_snapshot,
+    snapshot_at,
+    snapshot_versions,
     write_snapshot_atomic,
 )
 from tenzir_spark.sources.formats import read_parquet
@@ -34,6 +39,8 @@ except ImportError:  # pragma: no cover
     pq = None
 
 CHECKPOINT_DIR = "_checkpoints"
+# publish attempts of one commit before a CommitConflict reaches the caller
+COMMIT_TRIES = 20
 
 _WIDEN_OK = {
     ("int", "bigint"), ("int", "double"), ("bigint", "double"),
@@ -112,7 +119,6 @@ class LakeTable:
         snapshot-id-read semantics)."""
         io = io or DEFAULT_IO
         if version is not None:
-            from tenzir_spark.lake.format import snapshot_at
             return cls(spark, root, snapshot_at(root, version, io), io)
         snap = latest_snapshot(root, io)
         if snap is None:
@@ -244,67 +250,54 @@ class LakeTable:
         ``{"op":"widen","name":"n","type":"bigint"}``. Metadata-only —
         existing files are re-interpreted at read time via _align().
 
-        Concurrent commits are handled by refresh-and-retry: the ops are
+        The ops are an edit of the latest snapshot (_commit): they are
         idempotent against an already-evolved schema (re-adds and
-        completed renames skip), so replaying them on the refreshed
-        snapshot converges — the north rule's "schema evolution racing
-        concurrent commits" case (SURVEY §7 hard part 5).
+        completed renames skip), so replaying them on the snapshot a
+        concurrent writer published converges — the north rule's "schema
+        evolution racing concurrent commits" case (SURVEY §7 hard part 5).
         """
-        for _ in range(20):
-            try:
-                return self._alter_once(ops)
-            except CommitConflict:
-                self.refresh()
-        raise CommitConflict("exhausted alter retries")
 
-    def _alter_once(self, ops: list[dict]) -> None:
-        snap = self.snapshot
-        fields = {f.name: f for f in snap.schema.fields}
-        new_fields = list(snap.schema.fields)
-        applied = []
-        for op in ops:
-            if op["op"] == "add":
-                if op["name"] in fields:
-                    continue  # idempotent re-apply
-                dt = _parse_type(op["type"])
-                new_fields.append(T.StructField(op["name"], dt, True))
-                fields[op["name"]] = new_fields[-1]
-            elif op["op"] == "rename":
-                if op["from"] not in fields:
-                    if op["to"] in fields:
-                        continue  # already applied
-                    raise ValueError(f"rename: unknown column {op['from']!r}")
-                new_fields = [
-                    T.StructField(op["to"], f.dataType, f.nullable)
-                    if f.name == op["from"] else f for f in new_fields
-                ]
-                fields = {f.name: f for f in new_fields}
-            elif op["op"] == "widen":
-                old = fields[op["name"]].dataType.simpleString()
-                new = op["type"]
-                if old != new and (old, new) not in _WIDEN_OK:
-                    raise ValueError(f"illegal widen {old} -> {new} for {op['name']}")
-                dt = _parse_type(new)
-                new_fields = [
-                    T.StructField(f.name, dt, f.nullable)
-                    if f.name == op["name"] else f for f in new_fields
-                ]
-                fields = {f.name: f for f in new_fields}
-            else:
-                raise ValueError(f"unknown schema op {op!r}")
-            applied.append(op)
-        if not applied:
-            return
-        new_snap = Snapshot(
-            version=snap.version + 1,
-            schema_json=T.StructType(new_fields).jsonValue(),
-            schema_log=snap.schema_log + applied,
-            files=snap.files, num_buckets=snap.num_buckets,
-            key_col=snap.key_col, ledger=snap.ledger,
-            properties=snap.properties,
-        )
-        write_snapshot_atomic(self.root, new_snap)
-        self.snapshot = new_snap
+        def edit(snap: Snapshot) -> dict | None:
+            fields = {f.name: f for f in snap.schema.fields}
+            new_fields = list(snap.schema.fields)
+            applied = []
+            for op in ops:
+                if op["op"] == "add":
+                    if op["name"] in fields:
+                        continue  # idempotent re-apply
+                    dt = _parse_type(op["type"])
+                    new_fields.append(T.StructField(op["name"], dt, True))
+                    fields[op["name"]] = new_fields[-1]
+                elif op["op"] == "rename":
+                    if op["from"] not in fields:
+                        if op["to"] in fields:
+                            continue  # already applied
+                        raise ValueError(f"rename: unknown column {op['from']!r}")
+                    new_fields = [
+                        T.StructField(op["to"], f.dataType, f.nullable)
+                        if f.name == op["from"] else f for f in new_fields
+                    ]
+                    fields = {f.name: f for f in new_fields}
+                elif op["op"] == "widen":
+                    old = fields[op["name"]].dataType.simpleString()
+                    new = op["type"]
+                    if old != new and (old, new) not in _WIDEN_OK:
+                        raise ValueError(f"illegal widen {old} -> {new} for {op['name']}")
+                    dt = _parse_type(new)
+                    new_fields = [
+                        T.StructField(f.name, dt, f.nullable)
+                        if f.name == op["name"] else f for f in new_fields
+                    ]
+                    fields = {f.name: f for f in new_fields}
+                else:
+                    raise ValueError(f"unknown schema op {op!r}")
+                applied.append(op)
+            if not applied:
+                return None
+            return {"schema_json": T.StructType(new_fields).jsonValue(),
+                    "schema_log": snap.schema_log + applied}
+
+        self._commit(edit)
 
     # ------------------------------------------------------------------ write
 
@@ -586,6 +579,36 @@ class LakeTable:
             files.append(DataFile(rel, bucket, rows, schema_epoch, stats, kind))
         return files
 
+    def _commit(self, edit: Callable[[Snapshot], dict | None]) -> bool:
+        """Publish one snapshot: the optimistic compare-and-swap every
+        table mutation goes through (Iceberg's atomic metadata swap).
+
+        ``edit(latest)`` gets the latest published snapshot and returns
+        the Snapshot fields to change, or None when there is nothing to
+        commit. The next version is ``latest`` with those fields,
+        published with put_if_absent. If another writer published that
+        version first, ``edit`` runs again on the new latest snapshot (at
+        most COMMIT_TRIES times), so it must derive every field it returns
+        from the snapshot it is given. ``edit`` may raise
+        ConcurrentMergeConflict when work computed outside it (a Spark
+        rewrite) is stale; that is never retried here, the caller
+        recomputes. Returns whether a snapshot was published;
+        ``self.snapshot`` is then the published or the latest one."""
+        for _ in range(COMMIT_TRIES):
+            latest = latest_snapshot(self.root, self.io)
+            change = edit(latest)
+            if change is None:
+                self.snapshot = latest
+                return False
+            snap = replace(latest, version=latest.version + 1, **change)
+            try:
+                write_snapshot_atomic(self.root, snap, self.io)
+            except CommitConflict:
+                continue
+            self.snapshot = snap
+            return True
+        raise CommitConflict("exhausted snapshot commit retries")
+
     def _commit_files(self, new_files: list[DataFile], replace_buckets: list[int] | None,
                       base_files: list[DataFile] | None = None,
                       ledger_entries: dict[str, dict] | None = None) -> None:
@@ -594,45 +617,32 @@ class LakeTable:
         was computed from: if the replaced buckets changed since, the
         result is stale and we raise ConcurrentMergeConflict instead of
         silently dropping the other writer's files (Iceberg-style
-        conflict validation — callers recompute and retry)."""
+        conflict validation — callers recompute and retry). Commits
+        nothing once every ledger entry is in the table (converged)."""
         rb = set(replace_buckets) if replace_buckets is not None else None
         base_paths = (
             {f.path for f in base_files if f.bucket in rb}
             if rb is not None and base_files is not None else None
         )
-        for _ in range(20):
-            snap = latest_snapshot(self.root, self.io)
-            if ledger_entries and all(k in snap.ledger for k in ledger_entries):
-                self.snapshot = snap
-                return  # whole batch already applied — converged
-            if rb is not None and base_paths is not None:
-                cur_paths = {f.path for f in snap.files if f.bucket in rb}
-                if cur_paths != base_paths:
-                    raise ConcurrentMergeConflict(
-                        f"buckets {sorted(rb)} changed since the merge was computed")
-            if rb is None:
-                files = snap.files + new_files
-            else:
-                files = [f for f in snap.files if f.bucket not in rb] + new_files
+        entries = ledger_entries or {}
+
+        def edit(snap: Snapshot) -> dict | None:
+            if entries and all(k in snap.ledger for k in entries):
+                return None  # whole batch already applied — converged
+            if (base_paths is not None
+                    and {f.path for f in snap.files if f.bucket in rb} != base_paths):
+                raise ConcurrentMergeConflict(
+                    f"buckets {sorted(rb)} changed since the merge was computed")
+            kept = (snap.files if rb is None
+                    else [f for f in snap.files if f.bucket not in rb])
             ledger = dict(snap.ledger)
-            if ledger_entries:
-                for k, v in ledger_entries.items():
-                    # never overwrite another writer's entry (a racing
-                    # tail with different batching applied a prefix)
-                    ledger.setdefault(k, v)
-            new_snap = Snapshot(
-                version=snap.version + 1, schema_json=snap.schema_json,
-                schema_log=snap.schema_log, files=files,
-                num_buckets=snap.num_buckets, key_col=snap.key_col,
-                ledger=ledger, properties=snap.properties,
-            )
-            try:
-                write_snapshot_atomic(self.root, new_snap, self.io)
-                self.snapshot = new_snap
-                return
-            except CommitConflict:
-                continue
-        raise CommitConflict("exhausted snapshot commit retries")
+            for k, v in entries.items():
+                # never overwrite another writer's entry (a racing tail
+                # with different batching applied a prefix)
+                ledger.setdefault(k, v)
+            return {"files": kept + new_files, "ledger": ledger}
+
+        self._commit(edit)
 
     def expire_snapshots(self, keep_last: int = 2,
                          grace_seconds: float = 3600.0) -> dict:
@@ -659,13 +669,8 @@ class LakeTable:
         retention contract. Run only when no reader holds a snapshot
         older than the kept window.
         """
-        from tenzir_spark.lake.format import META_DIR, snapshot_at
-
         keep_last = max(1, int(keep_last))
-        meta_dir = self.io.join(self.root, META_DIR)
-        versions = sorted(
-            int(n[1:9]) for n in self.io.list(meta_dir)
-            if n.startswith("v") and n.endswith(".json"))
+        versions = snapshot_versions(self.root, self.io)
         kept, expired = versions[-keep_last:], versions[:-keep_last]
         referenced: set[str] = set()
         for v in kept:
@@ -705,7 +710,7 @@ class LakeTable:
             self.io.delete_dir(cdir)
             removed_dirs += 1
         for v in expired:
-            self.io.delete(self.io.join(meta_dir, f"v{v:08d}.json"))
+            self.io.delete(_meta_path(self.root, v, self.io))
         self.refresh()
         return {"snapshots_removed": len(expired), "files_removed": removed_files,
                 "dirs_removed": removed_dirs}
@@ -721,9 +726,10 @@ class LakeTable:
         - a missing/unreadable file is reported under ``missing`` (data
           loss is not repairable from metadata alone);
         - drifted rows/stats are reported under ``mismatched``, and with
-          ``repair=True`` a corrected snapshot commits atomically
-          (refresh-and-retry under concurrent commits). Drifted stats
-          are not cosmetic: ``read(key_range=...)`` prunes on the
+          ``repair=True`` one snapshot commit corrects them: the probed
+          entries, matched by path, in whatever snapshot is latest by
+          then (entries committed since the probe are left alone). Drifted
+          stats are not cosmetic: ``read(key_range=...)`` prunes on the
           recorded min/max, so bad bounds silently drop rows.
 
         Footer probes are metadata-only reads through the FileIO seam,
@@ -734,55 +740,43 @@ class LakeTable:
         if pq is None:  # pragma: no cover - pyarrow is baked in
             return {"checked": 0, "missing": [], "mismatched": [],
                     "repaired": False}
-        for _ in range(20):
-            snap = self.snapshot
+        snap = self.snapshot
 
-            def probe(f: DataFile):
-                cols = list(f.stats.keys()) or [snap.key_col]
-                try:
-                    return _footer_stats(
-                        self.io.join(self.root, f.path), cols, self.io)
-                except Exception as exc:
-                    return exc
-
-            with ThreadPoolExecutor(
-                    max_workers=min(16, max(len(snap.files), 1))) as ex:
-                probes = list(ex.map(probe, snap.files))
-            missing, mismatched, fixed = [], [], []
-            changed = False
-            for f, pr in zip(snap.files, probes):
-                if isinstance(pr, Exception):
-                    missing.append({"path": f.path, "error": str(pr)})
-                    fixed.append(f)
-                    continue
-                rows, stats = pr
-                if rows != f.rows or (f.stats and stats != f.stats):
-                    mismatched.append({
-                        "path": f.path, "recorded_rows": f.rows,
-                        "actual_rows": rows})
-                    fixed.append(DataFile(f.path, f.bucket, rows,
-                                          f.schema_epoch, stats, f.kind))
-                    changed = True
-                else:
-                    fixed.append(f)
-            out = {"checked": len(snap.files), "missing": missing,
-                   "mismatched": mismatched, "repaired": False}
-            if not (repair and changed):
-                return out
-            new_snap = Snapshot(
-                version=snap.version + 1, schema_json=snap.schema_json,
-                schema_log=snap.schema_log, files=fixed,
-                num_buckets=snap.num_buckets, key_col=snap.key_col,
-                ledger=snap.ledger, properties=snap.properties)
+        def probe(f: DataFile):
+            cols = list(f.stats.keys()) or [snap.key_col]
             try:
-                write_snapshot_atomic(self.root, new_snap, self.io)
-            except CommitConflict:
-                self.refresh()
+                return _footer_stats(
+                    self.io.join(self.root, f.path), cols, self.io)
+            except Exception as exc:
+                return exc
+
+        with ThreadPoolExecutor(
+                max_workers=min(16, max(len(snap.files), 1))) as ex:
+            probes = list(ex.map(probe, snap.files))
+        missing, mismatched = [], []
+        fixed: dict[str, dict] = {}  # path -> corrected rows and stats
+        for f, pr in zip(snap.files, probes):
+            if isinstance(pr, Exception):
+                missing.append({"path": f.path, "error": str(pr)})
                 continue
-            self.snapshot = new_snap
-            out["repaired"] = True
-            return out
-        raise CommitConflict("exhausted verify retries")
+            rows, stats = pr
+            if rows != f.rows or (f.stats and stats != f.stats):
+                mismatched.append({
+                    "path": f.path, "recorded_rows": f.rows,
+                    "actual_rows": rows})
+                fixed[f.path] = {"rows": rows, "stats": stats}
+
+        def edit(latest: Snapshot) -> dict | None:
+            if fixed.keys().isdisjoint(f.path for f in latest.files):
+                return None  # every drifted entry was replaced since
+            return {"files": [replace(f, **fixed[f.path]) if f.path in fixed
+                              else f for f in latest.files]}
+
+        out = {"checked": len(snap.files), "missing": missing,
+               "mismatched": mismatched, "repaired": False}
+        if repair and fixed:
+            out["repaired"] = self._commit(edit)
+        return out
 
     def purge_to_budget(self, high_bytes: int, low_bytes: int,
                         step: int = 1) -> dict:
@@ -815,17 +809,13 @@ class LakeTable:
             raise ValueError("low water mark must be smaller than high "
                              "water mark")
 
-        def _live() -> list[tuple[DataFile, int, float]]:
-            out = []
-            for f in self.snapshot.files:
-                p = self.io.join(self.root, f.path)
-                try:
-                    out.append((f, self.io.size(p), self.io.mtime(p)))
-                except FileNotFoundError:
-                    out.append((f, 0, 0.0))
-            return out
-
-        live = _live()
+        live: list[tuple[DataFile, int, float]] = []  # file, size, mtime
+        for f in self.snapshot.files:
+            p = self.io.join(self.root, f.path)
+            try:
+                live.append((f, self.io.size(p), self.io.mtime(p)))
+            except FileNotFoundError:
+                live.append((f, 0, 0.0))
         bytes_before = sum(sz for _, sz, _ in live)
         size = bytes_before
         evicted = 0
@@ -834,28 +824,11 @@ class LakeTable:
                     "bytes_after": size}
         while size > low_bytes and live:
             live.sort(key=lambda t: t[2])
-            drop = {id(t[0]) for t in live[:step]}
-            drop_paths = {t[0].path for t in live[:step]}
-            # snapshot-commit the eviction with the standard retry loop
-            for _ in range(20):
-                snap = latest_snapshot(self.root, self.io) or self.snapshot
-                files = [f for f in snap.files if f.path not in drop_paths]
-                new_snap = Snapshot(
-                    version=snap.version + 1, schema_json=snap.schema_json,
-                    schema_log=snap.schema_log, files=files,
-                    num_buckets=snap.num_buckets, key_col=snap.key_col,
-                    ledger=snap.ledger, properties=snap.properties,
-                )
-                try:
-                    write_snapshot_atomic(self.root, new_snap, self.io)
-                    self.snapshot = new_snap
-                    break
-                except CommitConflict:
-                    continue
-            else:
-                raise CommitConflict("exhausted purge commit retries")
-            evicted += len(drop_paths)
-            live = [t for t in live if id(t[0]) not in drop]
+            drop = {t[0].path for t in live[:step]}
+            self._commit(lambda snap: {"files": [
+                f for f in snap.files if f.path not in drop]})
+            evicted += len(drop)
+            live = [t for t in live if t[0].path not in drop]
             size = sum(sz for _, sz, _ in live)
         return {"evicted": evicted, "bytes_before": bytes_before,
                 "bytes_after": size}
@@ -933,50 +906,39 @@ class LakeTable:
         if self.mode == "mor":
             need = [b for b, fs in by_bucket.items()
                     if sum(1 for x in fs if x.kind == "delta") > max_deltas]
-            if not need:
-                return
-            if purge_deletes_below_lsn is None:
-                # METADATA-ONLY promotion for single-file buckets: a
-                # lone delta is already per-key resolved (every merge
-                # batch dedups to one row per key — the merge()
-                # contract / _prepare_mor's dedup), so "compacting" it
-                # is a kind re-tag, not a data rewrite — the Iceberg
-                # rewrite_data_files min-input-files analog. Safe under
-                # the commit/GC protocol: the path stays referenced
-                # (expire_snapshots GC is path-based over kept
-                # snapshots), content is unchanged so a concurrent
-                # merge computed from it stays valid, and older
-                # snapshots still resolve the file as a delta to the
-                # identical result. Tombstone purging always takes the
-                # rewrite path.
-                retag = [b for b in need if len(by_bucket[b]) == 1]
-                if retag:
-                    from dataclasses import replace as _dc_replace
-                    promoted = [_dc_replace(by_bucket[b][0], kind="base")
-                                for b in retag]
-                    self._commit_files(promoted, replace_buckets=retag,
-                                       base_files=base.files)
-                    need = [b for b in need if len(by_bucket[b]) > 1]
-                    if not need:
-                        return
-                    base = self.snapshot
-            resolved = self._latest_per_key(
-                self.read(buckets=need, resolve=False))
-            if purge_deletes_below_lsn is not None:
-                resolved = resolved.filter(
-                    (F.col("__op") != "delete")
-                    | (F.col("__lsn") >= F.lit(int(purge_deletes_below_lsn))))
-            new_files = self._write_bucketed(resolved)
-            self._commit_files(new_files, replace_buckets=need,
-                               base_files=base.files)
-            return
-        need = [b for b, fs in by_bucket.items()
+            # METADATA-ONLY promotion for single-file buckets: a lone
+            # delta is already per-key resolved (every merge batch dedups
+            # to one row per key — the merge() contract / _prepare_mor's
+            # dedup), so "compacting" it is a kind re-tag, not a data
+            # rewrite — the Iceberg rewrite_data_files min-input-files
+            # analog. Safe under the commit/GC protocol: the path stays
+            # referenced (expire_snapshots GC is path-based over kept
+            # snapshots), content is unchanged so a concurrent merge
+            # computed from it stays valid, and older snapshots still
+            # resolve the file as a delta to the identical result.
+            # Tombstone purging always takes the rewrite path.
+            rewrite = [b for b in need if len(by_bucket[b]) > 1
+                       or purge_deletes_below_lsn is not None]
+        else:
+            need = rewrite = [
+                b for b, fs in by_bucket.items()
                 if len(fs) > 1 and sum(x.rows for x in fs) < int(0.8 * target_rows)]
         if not need:
             return
-        df = self.read(buckets=need)
-        new_files = self._write_bucketed(df)
-        self._commit_files(new_files, replace_buckets=need,
+        promoted = [replace(by_bucket[b][0], kind="base")
+                    for b in need if b not in rewrite]
+        new_files: list[DataFile] = []
+        if rewrite and self.mode == "mor":
+            rows = self._latest_per_key(self.read(buckets=rewrite, resolve=False))
+            if purge_deletes_below_lsn is not None:
+                rows = rows.filter(
+                    (F.col("__op") != "delete")
+                    | (F.col("__lsn") >= F.lit(int(purge_deletes_below_lsn))))
+            new_files = self._write_bucketed(rows)
+        elif rewrite:
+            new_files = self._write_bucketed(self.read(buckets=rewrite))
+        # re-tagged and rewritten buckets publish in one snapshot
+        self._commit_files(promoted + new_files, replace_buckets=need,
                            base_files=base.files)
 
 

@@ -9,9 +9,12 @@ instead of the 200 default.
 
 from __future__ import annotations
 
+import contextlib
+import hashlib
 import os
 import sys
 import tempfile
+import uuid
 import zipfile
 import zipimport
 
@@ -25,7 +28,7 @@ def _defer_zip_directory_reads() -> None:
     of every task (``pyspark/worker_util.py``, ``setup_spark_files``).
     Before 3.13 each ``zipimporter`` then re-reads its archive's whole
     central directory: a worker holds ~24 of them (pyspark.zip, the
-    spark-core jar, tenzir_spark.zip, py4j), about 27k entries parsed per
+    spark-core jar, the tenzir_spark zip, py4j), about 27k entries parsed per
     task, 0.1-0.2 s of fixed cost per task that dwarfs a small
     micro-batch's UDF work. 3.13 only drops the cached directory and re-reads it at the
     next lookup; this does the same. Every worker that unpickles an
@@ -64,20 +67,33 @@ def package_pyfiles(out_dir: str | None = None) -> str:
     This is the artifact you would pass to ``spark-submit --py-files``
     on a real cluster; locally get_spark() addPyFile()s it so pandas-UDF
     workers can import the package regardless of the driver's cwd.
+
+    The zip is named by a digest of the package directory, so two
+    checkouts that share ``out_dir`` never ship each other's code, and
+    it is written under a temporary name and renamed into place, so a
+    process that opens it meanwhile sees a whole archive.
     """
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     out_dir = out_dir or tempfile.gettempdir()
-    zip_path = os.path.join(out_dir, "tenzir_spark.zip")
-    with zipfile.ZipFile(zip_path, "w", zipfile.ZIP_DEFLATED) as zf:
-        for dirpath, _dirnames, filenames in os.walk(pkg_dir):
-            if "__pycache__" in dirpath:
-                continue
-            for name in filenames:
-                if not name.endswith(".py"):
+    digest = hashlib.sha256(pkg_dir.encode()).hexdigest()[:16]
+    zip_path = os.path.join(out_dir, f"tenzir_spark-{digest}.zip")
+    tmp = f"{zip_path}.{uuid.uuid4().hex}.tmp"
+    try:
+        with zipfile.ZipFile(tmp, "w", zipfile.ZIP_DEFLATED) as zf:
+            for dirpath, _dirnames, filenames in os.walk(pkg_dir):
+                if "__pycache__" in dirpath:
                     continue
-                full = os.path.join(dirpath, name)
-                rel = os.path.join("tenzir_spark", os.path.relpath(full, pkg_dir))
-                zf.write(full, rel)
+                for name in filenames:
+                    if not name.endswith(".py"):
+                        continue
+                    full = os.path.join(dirpath, name)
+                    rel = os.path.join("tenzir_spark",
+                                       os.path.relpath(full, pkg_dir))
+                    zf.write(full, rel)
+        os.replace(tmp, zip_path)
+    finally:
+        with contextlib.suppress(FileNotFoundError):
+            os.unlink(tmp)
     return zip_path
 
 

@@ -2,7 +2,10 @@
 
 from __future__ import annotations
 
+import ast
 import os
+import pathlib
+from dataclasses import replace
 
 import pytest
 from pyspark.sql import Row
@@ -173,6 +176,10 @@ def test_fileio_seam_custom_backend(spark, tmp_path):
     # reload through the same backend and verify state
     t2 = LakeTable.load(spark, str(tmp_path / "io_t"), io=io)
     assert {r.url: r.v for r in t2.read().collect()} == {"a": 30, "b": 20}
+    # a schema change publishes its snapshot through the seam too
+    puts = io.puts
+    t2.alter([{"op": "add", "name": "tag", "type": "string"}])
+    assert io.puts == puts + 1
 
 
 def test_concurrent_merge_conflict_recomputes(spark, tmp_path):
@@ -460,3 +467,88 @@ def test_purge_to_budget_validates_config(table):
         table.purge_to_budget(10, 5, step=0)
     with pytest.raises(ValueError, match="water mark"):
         table.purge_to_budget(5, 10)
+
+
+def test_verify_repairs_drift_without_losing_a_racing_merge(spark, tmp_path):
+    """verify(repair=True) corrects drifted entries in whatever snapshot
+    is latest when it commits: a merge that a stale handle committed
+    after the probe keeps its files and its ledger entry."""
+    root = str(tmp_path / "vr")
+    t = LakeTable.create(spark, root, SCHEMA, "url", num_buckets=4,
+                         write_mode="mor")
+    _merge(t, spark, [(f"u{i}", "insert", i + 1, i) for i in range(12)], 0)
+    stale = LakeTable.load(spark, root)
+    good = t.snapshot.files[0]
+    drifted = replace(good, rows=good.rows + 7, stats={
+        **good.stats, "url": {"min": "zz", "max": "zz", "nulls": 0}})
+    t._commit(lambda snap: {"files": [drifted, *snap.files[1:]]})
+    key = good.stats["url"]["min"]
+
+    def pruned_hits():
+        return t.read(key_range=(key, key)).filter(F.col("url") == key).count()
+
+    assert pruned_hits() == 0  # the drifted bounds prune the key's file
+
+    _merge(stale, spark, [("late", "insert", 100, 1)], 1)
+    racing = {f.path for f in stale.snapshot.files} - {f.path for f in t.snapshot.files}
+    assert racing
+
+    report = t.verify(repair=True)
+    assert report == {"checked": len(t.snapshot.files) - len(racing),
+                      "missing": [],
+                      "mismatched": [{"path": good.path,
+                                      "recorded_rows": good.rows + 7,
+                                      "actual_rows": good.rows}],
+                      "repaired": True}
+    latest = latest_snapshot(root)
+    assert t.snapshot == latest
+    assert racing <= {f.path for f in latest.files}
+    assert set(latest.ledger) == {"0", "1"}
+    assert next(f for f in latest.files if f.path == good.path) == good
+    assert pruned_hits() == 1
+    assert t.verify() == {"checked": len(latest.files), "missing": [],
+                          "mismatched": [], "repaired": False}
+
+    os.remove(os.path.join(root, good.path))
+    report = t.verify(repair=True)
+    assert [m["path"] for m in report["missing"]] == [good.path]
+    assert not report["mismatched"] and report["repaired"] is False
+
+
+def _calls_by_scope(tree: ast.AST) -> list[tuple[str, str, int]]:
+    """(called name, enclosing class/function path, line) of every call."""
+    out = []
+
+    def visit(node, scope):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.ClassDef, ast.FunctionDef,
+                                  ast.AsyncFunctionDef)):
+                visit(child, (*scope, child.name))
+                continue
+            if isinstance(child, ast.Call):
+                fn = child.func
+                name = getattr(fn, "id", None) or getattr(fn, "attr", None)
+                out.append((name, ".".join(scope), child.lineno))
+            visit(child, scope)
+
+    visit(tree, ())
+    return out
+
+
+def test_snapshots_publish_only_through_commit():
+    """Every table mutation publishes through LakeTable._commit, the one
+    optimistic compare-and-swap: write_snapshot_atomic is called only by
+    it and by create, and a Snapshot is only built by create and when
+    read back from JSON (every other one is a dataclasses.replace of the
+    latest snapshot)."""
+    root = pathlib.Path(__file__).resolve().parent.parent
+    calls = []
+    for path in sorted((root / "tenzir_spark").rglob("*.py")):
+        for name, scope, line in _calls_by_scope(ast.parse(path.read_text())):
+            if name in ("write_snapshot_atomic", "Snapshot"):
+                calls.append((name, scope, f"{path.relative_to(root)}:{line}"))
+    publishes = sorted(scope for name, scope, _ in calls
+                       if name == "write_snapshot_atomic")
+    assert publishes == ["LakeTable._commit", "LakeTable.create"], calls
+    builds = sorted(scope for name, scope, _ in calls if name == "Snapshot")
+    assert builds == ["LakeTable.create", "Snapshot.from_json"], calls

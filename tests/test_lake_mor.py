@@ -55,7 +55,13 @@ def test_mor_compaction_preserves_state(table, spark):
     _merge(table, spark, [("a", "update", 3, 11), ("b", "delete", 4, None),
                           ("c", "insert", 5, 30)], 1)
     before = {r.url: r.v for r in table.read().collect()}
+    # a mixed compaction: "c"'s bucket holds one delta (re-tagged), the
+    # others two (rewritten); both kinds publish in one snapshot
+    buckets = [f.bucket for f in table.snapshot.files]
+    assert sorted(buckets.count(b) for b in set(buckets)) == [1, 2, 2]
+    version = table.snapshot.version
     table.compact()
+    assert table.snapshot.version == version + 1
     after = {r.url: r.v for r in table.read().collect()}
     assert before == after == {"a": 11, "c": 30}
     assert all(f.kind == "base" for f in table.snapshot.files)

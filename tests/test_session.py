@@ -1,11 +1,13 @@
 """session.py: the zipimporter backport (``importlib.invalidate_caches()``
 drops each zip archive's cached directory instead of re-reading it, and
-a module added to an archive afterwards still imports), and the default
-driver heap sized to the machine."""
+a module added to an archive afterwards still imports), the executor
+package zip, and the default driver heap sized to the machine."""
 
 from __future__ import annotations
 
 import importlib
+import os
+import shutil
 import sys
 import uuid
 import zipfile
@@ -118,3 +120,36 @@ def test_default_driver_memory_without_sysconf(monkeypatch):
 
     monkeypatch.setattr(session.os, "sysconf", unsupported)
     assert session.default_driver_memory() == "32g"
+
+
+def test_package_zip_is_per_checkout(tmp_path, monkeypatch):
+    """Two checkouts that share a temp dir each ship their own source:
+    the zip is named by the package directory, and nothing but whole
+    archives is left in the directory."""
+    from tenzir_spark import session
+
+    pkg = os.path.dirname(os.path.abspath(session.__file__))
+    other = tmp_path / "checkout" / "tenzir_spark"
+    shutil.copytree(pkg, other, ignore=shutil.ignore_patterns("__pycache__"))
+    marker = f"# edited copy {uuid.uuid4().hex}\n"
+    with open(other / "__init__.py", "a") as fh:
+        fh.write(marker)
+    shared = tmp_path / "tmp"
+    shared.mkdir()
+
+    here = session.package_pyfiles(str(shared))
+    monkeypatch.setattr(session, "__file__", str(other / "session.py"))
+    there = session.package_pyfiles(str(shared))
+    assert here != there
+    assert session.package_pyfiles(str(shared)) == there  # stable name
+    assert sorted(os.listdir(shared)) == sorted(
+        os.path.basename(p) for p in (here, there))
+
+    def init_source(path):
+        with zipfile.ZipFile(path) as zf:
+            return zf.read("tenzir_spark/__init__.py").decode()
+
+    assert marker not in init_source(here)
+    assert init_source(there).endswith(marker)
+    with zipfile.ZipFile(there) as zf:
+        assert "tenzir_spark/lake/table.py" in zf.namelist()
