@@ -15,7 +15,11 @@ how the survivors are committed.
 from __future__ import annotations
 
 import json
+import os
+from urllib.parse import unquote, urlparse
 
+import pyarrow.parquet as pq
+from pyarrow import ArrowException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -24,40 +28,139 @@ from tenzir_spark.lake.table import LakeTable
 from tenzir_spark.sources.formats import read_parquet
 
 
-def _epoch_rows_from_footers(change_log: DataFrame) -> dict[int, int] | None:
-    """Per-epoch row counts read from the parquet footers of an
-    epoch-partitioned file-backed log — a driver-side metadata read that
-    replaces a full-scan discovery aggregate (r6). Returns None when the
-    log is not a local epoch-partitioned parquet directory (streaming
-    micro-batch frames, filtered views, remote filesystems) or has too
-    many files for a cheap footer sweep — callers then fall back to the
-    scan-based discovery."""
-    try:
-        # bare-scan check: inputFiles() ignores row filters, so a
-        # filtered view could "discover" epochs whose surviving row set
-        # is empty and wrongly ledger them as applied — only trust the
-        # footers when the frame is the unmodified file relation
-        plan = change_log._jdf.queryExecution().analyzed().toString()
-        if not plan.lstrip().startswith("Relation"):
+def _epoch_rows_from_footers(change_log: DataFrame,
+                             files: list[str] | None = None,
+                             ) -> tuple[dict[int, int], dict[int, list[str]]] | None:
+    """Discovery without a Spark job: per-epoch row counts and schema
+    descriptors of an epoch-partitioned parquet log, read on the driver
+    from its files' footers.
+
+    Row counts are footer metadata. A file's descriptors are known to be
+    empty when every row group carries ``schema_descriptor`` statistics
+    whose null count equals its row count; such a file is never opened.
+    Only the other files are read, and only their ``op`` and
+    ``schema_descriptor`` columns.
+
+    ``files`` are the frame's parquet files when the caller knows them
+    (a streaming micro-batch, see _stream_batch_files); otherwise they
+    come from ``inputFiles()``, trusted only when the frame is the bare
+    file relation. Returns None when the log is not a local
+    epoch-partitioned parquet set (a filtered view, an in-memory frame,
+    a remote filesystem) or has too many files for a cheap footer sweep;
+    callers then fall back to _epoch_rows_from_scan."""
+    if files is None:
+        try:
+            # bare-scan check: inputFiles() ignores row filters, so a
+            # filtered view could "discover" epochs whose surviving row
+            # set is empty and wrongly ledger them as applied — only
+            # trust the footers when the frame is the unmodified file
+            # relation
+            plan = change_log._jdf.queryExecution().analyzed().toString()
+            if not plan.lstrip().startswith("Relation"):
+                return None
+            files = change_log.inputFiles()
+        except Exception:
             return None
-        files = change_log.inputFiles()
-    except Exception:
-        return None
     if not files or len(files) > 4096:
         return None
+    rows: dict[int, int] = {}
+    desc: dict[int, list[str]] = {}
     try:
-        import pyarrow.parquet as pq
-        from urllib.parse import unquote, urlparse
-        out: dict[int, int] = {}
-        for f in files:
+        for f in sorted(files):
             if "epoch=" not in f or not f.endswith(".parquet"):
                 return None
             epoch = int(f.split("epoch=")[1].split("/")[0])
             path = unquote(urlparse(f).path) if f.startswith("file:") else f
-            out[epoch] = out.get(epoch, 0) + pq.ParquetFile(path).metadata.num_rows
-        return out
-    except Exception:
+            found = desc.setdefault(epoch, [])
+            with pq.ParquetFile(path) as pf:
+                md = pf.metadata
+                rows[epoch] = rows.get(epoch, 0) + md.num_rows
+                names = pf.schema_arrow.names
+                if "schema_descriptor" not in names:
+                    continue
+                col = names.index("schema_descriptor")
+                if all(_all_null(md.row_group(g), col)
+                       for g in range(md.num_row_groups)):
+                    continue
+                t = pf.read(columns=["op", "schema_descriptor"])
+            for op, d in zip(t.column("op").to_pylist(),
+                             t.column("schema_descriptor").to_pylist()):
+                if op == "schema" and d:
+                    found.append(d)
+        return rows, desc
+    except (OSError, ValueError, KeyError, ArrowException):
         return None
+
+
+def _all_null(row_group, col: int) -> bool:
+    """Whether the footer proves column ``col`` of the row group null."""
+    st = row_group.column(col).statistics
+    return (st is not None and st.has_null_count
+            and st.null_count == row_group.num_rows)
+
+
+def _epoch_rows_from_scan(change_log: DataFrame,
+                          ) -> tuple[dict[int, int], dict[int, list[str]]]:
+    """Discovery for any frame: one scan counts each epoch's rows and
+    collects its schema descriptors (collect_list skips the nulls of
+    non-schema rows)."""
+    found = (change_log.groupBy("epoch").agg(
+        F.collect_list(F.when(F.col("op") == "schema",
+                              F.col("schema_descriptor"))).alias("ds"),
+        F.count(F.lit(1)).alias("n"))
+        .collect())
+    return ({r["epoch"]: int(r["n"]) for r in found},
+            {r["epoch"]: [d for d in r["ds"] if d] for r in found})
+
+
+def _stream_batch_files(checkpoint_dir: str, batch_id: int) -> list[str] | None:
+    """The parquet files micro-batch ``batch_id`` of a one-source file
+    stream read, resolved from the query's checkpoint instead of a scan.
+
+    ``offsets/<id>`` holds ``v1``, the batch metadata JSON and
+    ``{"logOffset": N}``. The batch reads the source-log batches after
+    the previous batch's logOffset (-1 before batch 0) through N. Each
+    is ``sources/0/<b>``, or ``sources/0/<b>.compact`` on a compaction
+    batch, whose JSON lines after ``v1`` name one file each (``path``,
+    ``batchId``); a compact file repeats every earlier entry, hence the
+    ``batchId`` filter. This layout is Spark's, not API: a missing file,
+    an unexpected header, a non-local checkpoint or a non-local file
+    returns None, and the caller falls back to the scan discovery."""
+    if checkpoint_dir.startswith("file:"):
+        checkpoint_dir = unquote(urlparse(checkpoint_dir).path)
+    elif "://" in checkpoint_dir:
+        return None
+
+    def lines(*parts: str) -> list[str]:
+        with open(os.path.join(checkpoint_dir, *parts), encoding="utf-8") as fh:
+            out = fh.read().splitlines()
+        if not out or out[0] != "v1":
+            raise ValueError("unexpected checkpoint log header")
+        return out
+
+    def log_offset(b: int) -> int:
+        got = lines("offsets", str(b))
+        if len(got) != 3:
+            raise ValueError("not a one-source offset log entry")
+        return int(json.loads(got[2])["logOffset"])
+
+    try:
+        start = log_offset(batch_id - 1) if batch_id > 0 else -1
+        end = log_offset(batch_id)
+        files: list[str] = []
+        for b in range(start + 1, end + 1):
+            name = str(b)
+            if not os.path.exists(os.path.join(checkpoint_dir, "sources", "0", name)):
+                name += ".compact"
+            for line in lines("sources", "0", name)[1:]:
+                entry = json.loads(line)
+                if entry["batchId"] == b:
+                    files.append(entry["path"])
+    except (OSError, ValueError, KeyError, TypeError):
+        return None
+    if not all(f.startswith("file:") for f in files):
+        return None
+    return files
 
 
 def descriptor_to_alter(desc: str) -> dict:
@@ -128,21 +231,27 @@ class CdcEngine:
         return data.select(*cols), post
 
     def run(self, change_log: DataFrame, epochs: list[int] | None = None,
-            max_coalesce: int = 8) -> list[dict]:
+            max_coalesce: int = 8,
+            files: list[str] | None = None) -> list[dict]:
         """Tail the log in epoch order (resumable: already-applied epochs
         short-circuit via the ledger).
 
         ONE upfront discovery yields every epoch's exact row count and
-        schema directives, so serial pre-work is a single job regardless
-        of epoch count — per-epoch serial cost is the Amdahl term of the
-        whole apply path (BASELINE.md). A local epoch-partitioned
-        parquet log reads its row counts from the parquet footers (a
-        driver-side metadata read) and scans only the op=='schema' rows,
-        pruned to three narrow columns; any other frame (a streaming
-        micro-batch, a filtered view) counts rows in the same scan that
-        collects the directives (collect_list skips the nulls of
-        non-schema rows). An explicit ``epochs`` list applies just those
-        epochs off the same discovery.
+        schema directives, so serial pre-work is fixed regardless of
+        epoch count — per-epoch serial cost is the Amdahl term of the
+        whole apply path (BASELINE.md). Discovery launches no Spark job
+        when the log's parquet files are known: the footers give the
+        row counts, and only files whose footers do not prove
+        ``schema_descriptor`` all-null are opened, on the driver, for
+        their descriptor rows (_epoch_rows_from_footers). The files are
+        ``files`` when the caller passes them (run_stream resolves a
+        micro-batch's files from its checkpoint), else the frame's own
+        when it is the bare relation of a local epoch-partitioned
+        parquet log. Any other frame (a filtered view, an in-memory
+        frame, an unresolvable micro-batch) falls back to one scan that
+        counts rows and collects the directives together
+        (_epoch_rows_from_scan). An explicit ``epochs`` list applies just
+        those epochs off the same discovery.
 
         A backlog COALESCES: runs of up to ``max_coalesce``
         consecutive pending epochs with no rename between them apply as
@@ -167,8 +276,9 @@ class CdcEngine:
         count is the one gate of the dedup plan, and it bounds the
         batch's distinct keys. A batch of at most one table slice
         (65,536 rows: a live-tail micro-batch) dedups with struct max_by
-        inside the survivor write's job, so it costs discovery plus one
-        apply job; a larger one takes the broadcast two-pass, whose four
+        behind a single shuffle inside the survivor write's job, so a
+        micro-batch with known files costs that one apply job; a larger
+        one takes the broadcast two-pass, whose four
         extra jobs pay for themselves on large batches; a pass 1
         that overflows the broadcast key cap falls back to struct max_by
         (_prepare_mor). On a failure nothing from that batch on commits
@@ -178,20 +288,10 @@ class CdcEngine:
         LakeTable.merge_commit_batch). A frame with no rows discovers no
         epochs and commits nothing.
         """
-        rows = _epoch_rows_from_footers(change_log)
-        if rows is not None:
-            desc: dict[int, list[str]] = {e: [] for e in rows}
-            for r in (change_log.filter(F.col("op") == "schema")
-                      .select("epoch", "schema_descriptor").collect()):
-                desc.setdefault(r[0], []).append(r[1])
-        else:
-            found = (change_log.groupBy("epoch").agg(
-                F.collect_list(F.when(F.col("op") == "schema",
-                                      F.col("schema_descriptor"))).alias("ds"),
-                F.count(F.lit(1)).alias("n"))
-                .collect())
-            rows = {r["epoch"]: int(r["n"]) for r in found}
-            desc = {r["epoch"]: [d for d in r["ds"] if d] for r in found}
+        found = _epoch_rows_from_footers(change_log, files)
+        if found is None:
+            found = _epoch_rows_from_scan(change_log)
+        rows, desc = found
         if epochs is None:
             epochs = sorted(rows)
         return self._run_batched(change_log, epochs, desc, rows,
@@ -301,6 +401,15 @@ class CdcEngine:
         sources don't have this constraint; for file logs it is the
         standard atomic-publish discipline.
 
+        Discovery reads no data: each micro-batch's files come from the
+        query's own checkpoint (``offsets/<batch_id>`` and the source
+        log ``sources/0``, compaction files included;
+        _stream_batch_files), and run() reads their footers. A batch
+        whose files cannot be resolved (an unrecognised or remote
+        checkpoint layout) falls back to the scan discovery, with the
+        same result. A re-run of a batch after a crash resolves the same
+        files, because Spark re-runs it from the same logged offsets.
+
         ``trigger`` maps straight to DataStreamWriter.trigger (e.g.
         ``{"availableNow": True}`` to drain the backlog and stop, or
         ``{"processingTime": "10 seconds"}`` for a continuous tail).
@@ -312,7 +421,8 @@ class CdcEngine:
 
         def apply_batch(batch_df, batch_id):
             # an empty micro-batch discovers no epochs and commits nothing
-            self.run(batch_df, max_coalesce=max_coalesce)
+            self.run(batch_df, max_coalesce=max_coalesce,
+                     files=_stream_batch_files(checkpoint_dir, batch_id))
 
         writer = (stream.writeStream
                   .foreachBatch(apply_batch)

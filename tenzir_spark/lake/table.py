@@ -45,7 +45,6 @@ COMMIT_TRIES = 20
 _WIDEN_OK = {
     ("int", "bigint"), ("int", "double"), ("bigint", "double"),
     ("float", "double"), ("int", "decimal(20,0)"), ("bigint", "decimal(20,0)"),
-    ("string", "string"),
 }
 
 
@@ -126,7 +125,13 @@ class LakeTable:
         return cls(spark, root, snap, io)
 
     def refresh(self) -> "LakeTable":
-        self.snapshot = latest_snapshot(self.root, self.io)
+        """Move to the latest snapshot. Published snapshots are
+        immutable, so when the newest version on disk is the one held
+        here, the listing is the whole read: a table's one writer (a
+        live tail) reads a snapshot once per batch, at its commit."""
+        versions = snapshot_versions(self.root, self.io)
+        if not versions or versions[-1] != self.snapshot.version:
+            self.snapshot = latest_snapshot(self.root, self.io)
         return self
 
     # ------------------------------------------------------------------ read
@@ -251,10 +256,11 @@ class LakeTable:
         existing files are re-interpreted at read time via _align().
 
         The ops are an edit of the latest snapshot (_commit): they are
-        idempotent against an already-evolved schema (re-adds and
-        completed renames skip), so replaying them on the snapshot a
-        concurrent writer published converges — the north rule's "schema
-        evolution racing concurrent commits" case (SURVEY §7 hard part 5).
+        idempotent against an already-evolved schema (re-adds, completed
+        renames and widens to the current type skip), so replaying them
+        on the snapshot a concurrent writer published converges — the
+        north rule's "schema evolution racing concurrent commits" case
+        (SURVEY §7 hard part 5).
         """
 
         def edit(snap: Snapshot) -> dict | None:
@@ -281,7 +287,9 @@ class LakeTable:
                 elif op["op"] == "widen":
                     old = fields[op["name"]].dataType.simpleString()
                     new = op["type"]
-                    if old != new and (old, new) not in _WIDEN_OK:
+                    if old == new:
+                        continue  # already this type: idempotent re-apply
+                    if (old, new) not in _WIDEN_OK:
                         raise ValueError(f"illegal widen {old} -> {new} for {op['name']}")
                     dt = _parse_type(new)
                     new_fields = [
@@ -416,26 +424,29 @@ class LakeTable:
         """The apply's prepare, shared by both write modes: max-lsn dedup
         to one survivor row per key, the post-dedup ``post_dedup`` (the
         text UDF), and the survivor write as per-bucket files with
-        __lsn/__op. The heavy shuffle carries only per-partition dedup
-        SURVIVORS, never raw duplicates.
+        __lsn/__op. Above one table slice, no shuffle carries raw
+        duplicates: only dedup SURVIVORS move with their payload.
 
-        The max-lsn dedup takes one of three routes over two plans. The
-        one gate is ``batch_rows``, the batch's exact row count from
-        CdcEngine.run's discovery (parquet footers or the discovery
-        scan) — an upper bound on its distinct keys:
+        The max-lsn dedup takes one of three routes. The one gate is
+        ``batch_rows``, the batch's exact row count from CdcEngine.run's
+        discovery (parquet footers or the discovery scan) — an upper
+        bound on its distinct keys:
 
         * **struct max_by, one slice** (batch_rows <= TABLE_SLICE_ROWS =
           65,536, the reference's table-slice size and the Arrow batch
-          size of get_spark): groupBy(__bucket, key) with a map-side
-          partial aggregate, so hot keys (Zipf domains) collapse to one
-          row per input partition BEFORE the exchange — the north rule's
-          skew defense for free — and only survivors shuffle. It runs
-          inside the delta write's job, so a live-tail micro-batch pays
-          no extra Spark job for its dedup. The two-pass would add four
-          (pass-1 aggregate, eager checkpoint, stats collect, broadcast
-          build); on the bench log it measured slower up to 64k rows,
-          level at 100k and faster from 1M rows on (CHANGES.md has the
-          sweep).
+          size of get_spark): the batch is repartitioned into nb
+          partitions by bucket FIRST, then groupBy(__b, key) takes
+          max_by. HashPartitioning(__b) satisfies the aggregate's
+          clustering on (__b, key), so the plan has ONE exchange (the
+          REPARTITION_BY_NUM, which AQE does not coalesce) and one sort,
+          and the survivors leave the aggregate still clustered by
+          bucket for the write. A slice is small enough that shuffling
+          its raw rows costs less than a second exchange. It runs inside
+          the delta write's job, so a live-tail micro-batch pays no extra
+          Spark job for its dedup. The two-pass would add four (pass-1
+          aggregate, eager checkpoint, stats collect, broadcast build);
+          on the bench log it measured slower up to 64k rows, level at
+          100k and faster from 1M rows on (CHANGES.md has the sweep).
         * **broadcast two-pass** (TABLE_SLICE_ROWS < batch_rows <=
           EXACT_MAX_ROWS): pass 1 aggregates max(lsn) per key — a
           FIXED-WIDTH agg buffer that updates in place, ~4x cheaper per
@@ -457,15 +468,19 @@ class LakeTable:
         * **struct max_by fallback** (no row count — a single-epoch
           merge() — or pass 1 overflows DEDUP_BCAST_KEYS, the
           10^10-scale regime where a batch touches hundreds of millions
-          of urls): the same plan as the one-slice route.
+          of urls): groupBy(__b, key) with a map-side partial aggregate,
+          so hot keys (Zipf domains) collapse to one row per input
+          partition BEFORE the exchange — the north rule's skew defense
+          — and only survivors shuffle, by (__b, key) and then into the
+          nb bucket partitions.
 
-        Both plans end with an EXPLICIT nb-partition repartition by
-        bucket, which AQE respects, so the post-dedup text UDF and the
-        parquet write spread over ~nb tasks instead of the single task
-        AQE's advisory-size coalescing collapses a small survivor set
-        into (round 5 measured that collapse as a flat 2.5 s single-task
-        tail). File count stays <=nb: partitionBy splits by __b inside
-        each task.
+        Every route ends with the survivors in an EXPLICIT nb-partition
+        repartition by bucket, which AQE respects, so the post-dedup
+        text UDF and the parquet write spread over ~nb tasks instead of
+        the single task AQE's advisory-size coalescing collapses a small
+        survivor set into (round 5 measured that collapse as a flat 2.5 s
+        single-task tail). File count stays <=nb: partitionBy splits by
+        __b inside each task.
 
         No target read, no join against the table; rows_applied and the
         lsn watermark come from the parquet footers of the files just
@@ -503,11 +518,17 @@ class LakeTable:
                     & (F.col("__lsn") == F.col("__mx")),
                     "leftsemi")
                 delta = delta.withColumn("__b", bucket_expr(key, nb))
+                delta = delta.repartition(nb, F.col("__b"))
+            elif batch_rows is not None and batch_rows <= TABLE_SLICE_ROWS:
+                # the bucket shuffle clusters by (__b, key) already
+                delta = self._latest_per_key(
+                    delta.withColumn("__b", bucket_expr(key, nb))
+                    .repartition(nb, F.col("__b")),
+                    by=("__b",))
             else:
                 delta = self._latest_per_key(
                     delta.withColumn("__b", bucket_expr(key, nb)),
-                    by=("__b",))
-            delta = delta.repartition(nb, F.col("__b"))
+                    by=("__b",)).repartition(nb, F.col("__b"))
             if post_dedup is not None:
                 delta = post_dedup(delta)
             # typed nulls for schema columns the stream didn't carry

@@ -257,34 +257,168 @@ def test_mor_final_state_matches_replay(spark, change_log, tmp_path_factory):
     assert {r["url"] for r in table.read().collect()} == set(expected)
 
 
-def test_footer_and_scan_discovery_identical(spark, change_log,
+def _state(table) -> dict:
+    """The table's rows by url, binary values as bytes."""
+    rows = {}
+    for r in table.read().collect():
+        d = r.asDict()
+        rows[d["url"]] = {k: (bytes(v) if isinstance(v, bytearray) else v)
+                          for k, v in d.items()}
+    return rows
+
+
+def _no_scan(df):
+    raise AssertionError("the scan discovery ran")
+
+
+@pytest.fixture(scope="module")
+def evolving_log_dir(spark, change_log, tmp_path_factory):
+    """change_log as an epoch-partitioned parquet log whose schema rows
+    split the coalescing: an int column ``n`` (epoch 1 add), its widen
+    to bigint (epoch 2), the generator's crawl_tag_3 add (epoch 3) and a
+    rename of it (epoch 4). Epochs 3 and 4 are written without column
+    statistics, so their footers cannot prove any file descriptor-free."""
+    import json as _json
+
+    descs = [(1, {"type": "add", "name": "n", "spark_type": "int"}),
+             (2, {"type": "widen", "name": "n", "spark_type": "bigint"}),
+             (4, {"type": "rename", "from": "crawl_tag_3", "to": "tag_3"})]
+    extra = spark.createDataFrame(
+        [(e * EPOCH_SIZE, "schema", None, e, _json.dumps(d)) for e, d in descs],
+        "lsn long, op string, url string, epoch int, schema_descriptor string")
+    log = (change_log
+           .withColumn("n", F.when(F.col("op") != "schema",
+                                   (F.col("lsn") % 7).cast("int")))
+           .unionByName(extra, allowMissingColumns=True))
+    log_dir = str(tmp_path_factory.mktemp("cdclog_ev") / "log")
+    stats_less = F.col("epoch").isin(3, 4)
+    (log.filter(~stats_less).write.mode("overwrite")
+     .partitionBy("epoch").parquet(log_dir))
+    (log.filter(stats_less).write.mode("append")
+     .option("parquet.column.statistics.enabled", "false")
+     .partitionBy("epoch").parquet(log_dir))
+    return log_dir
+
+
+def test_footer_and_scan_discovery_identical(spark, change_log, evolving_log_dir,
                                              tmp_path_factory, monkeypatch):
-    """run() reads per-epoch row counts from parquet footers when the
-    log is file-backed (no discovery job); non-file logs count rows in
-    the one discovery scan that also collects the schema directives.
-    Both row sources must leave byte-identical final state on the same
-    log."""
+    """run() discovers a file-backed log from its parquet footers (no
+    Spark job): row counts from the footers, schema rows read on the
+    driver from only the files whose footers do not prove
+    ``schema_descriptor`` all-null. Any other frame takes the one
+    discovery scan. On a log with add, widen and rename rows, and with
+    files that carry no column statistics, both discoveries must leave
+    byte-identical final state; the footer run has the scan disabled."""
+    from urllib.parse import urlparse
+
+    import pyarrow.parquet as pq
+
     import tenzir_spark.cdc.engine as eng_mod
-    log_dir = str(tmp_path_factory.mktemp("cdclog") / "log")
-    change_log.write.mode("overwrite").partitionBy("epoch").parquet(log_dir)
-    plog = spark.read.parquet(log_dir)
-    assert eng_mod._epoch_rows_from_footers(plog), "footer path must engage"
+
+    plog = spark.read.parquet(evolving_log_dir)
+    footer_rows, footer_desc = eng_mod._epoch_rows_from_footers(plog)
+    scan_rows, scan_desc = eng_mod._epoch_rows_from_scan(plog)
+    assert footer_rows == scan_rows and footer_desc == scan_desc
+    assert [len(footer_desc[e]) for e in range(6)] == [0, 1, 1, 1, 1, 0]
+    # a file is read only when its footer cannot rule out schema rows:
+    # every stats-less file (epochs 3, 4), no file of epochs 0 and 5
+    opened = []
+
+    class Recording(pq.ParquetFile):
+        def __init__(self, path, *args, **kwargs):
+            super().__init__(path, *args, **kwargs)
+            self.path = path
+
+        def read(self, *args, **kwargs):
+            opened.append(self.path)
+            return super().read(*args, **kwargs)
+
+    monkeypatch.setattr(eng_mod.pq, "ParquetFile", Recording)
+    assert eng_mod._epoch_rows_from_footers(plog)[1] == footer_desc
+    monkeypatch.undo()
+    files = [urlparse(f).path for f in plog.inputFiles()]
+    in_epoch = lambda e: {f for f in files if f"/epoch={e}/" in f}
+    assert in_epoch(3) | in_epoch(4) <= set(opened)
+    assert not (in_epoch(0) | in_epoch(5)) & set(opened)
+    assert set(opened) & in_epoch(1) and set(opened) & in_epoch(2)
+
     states = []
-    for force_scan in (False, True):
-        if force_scan:
+    for discovery in ("footers", "scan"):
+        if discovery == "footers":
+            monkeypatch.setattr(eng_mod, "_epoch_rows_from_scan", _no_scan)
+        else:
             monkeypatch.setattr(eng_mod, "_epoch_rows_from_footers",
-                                lambda df: None)
-        root = str(tmp_path_factory.mktemp(f"lake_f{force_scan}") / "pages")
+                                lambda df, files=None: None)
+        root = str(tmp_path_factory.mktemp(f"lake_{discovery}") / "pages")
         table = LakeTable.create(spark, root, pages_schema(), "url",
                                  num_buckets=8, write_mode="mor")
         CdcEngine(spark, table).run(plog)
-        rows = {}
-        for r in table.read().collect():
-            d = r.asDict()
-            rows[d["url"]] = {k: (bytes(v) if isinstance(v, bytearray) else v)
-                              for k, v in d.items()}
-        states.append(rows)
+        monkeypatch.undo()
+        # the rename at epoch 4 splits the log into two batches
+        assert sorted(e for e, v in table.snapshot.ledger.items()
+                      if "coalesced_into" not in v) == ["3", "5"]
+        names = [f.name for f in table.snapshot.schema.fields]
+        assert "tag_3" in names and "crawl_tag_3" not in names
+        assert table.snapshot.schema["n"].dataType.simpleString() == "bigint"
+        states.append(_state(table))
     assert states[0] and states[0] == states[1]
+
+
+def test_slice_route_plans_one_exchange(spark, change_log, tmp_path_factory,
+                                        monkeypatch):
+    """The frame _prepare_mor hands to the survivor write: a batch of at
+    most one table slice is repartitioned by bucket before its max_by
+    aggregate, so its plan holds exactly one exchange (and one sort);
+    the two-pass keeps its broadcast semi join behind one bucket
+    exchange, and the at-scale fallback keeps its map-side partial
+    aggregate ahead of two exchanges."""
+    import re
+
+    import tenzir_spark.lake.table as table_mod
+
+    log_dir = str(tmp_path_factory.mktemp("cdclog_plan") / "log")
+    change_log.write.mode("overwrite").partitionBy("epoch").parquet(log_dir)
+    plog = spark.read.parquet(log_dir)
+    frames = []
+    write = table_mod.LakeTable._write_bucketed
+
+    def capture(self, df, *args, **kwargs):
+        frames.append(df)
+        return write(self, df, *args, **kwargs)
+
+    monkeypatch.setattr(table_mod.LakeTable, "_write_bucketed", capture)
+    plans = {}
+    for route, slice_rows, keys in (
+            ("slice", table_mod.TABLE_SLICE_ROWS, table_mod.DEDUP_BCAST_KEYS),
+            ("two_pass", 0, table_mod.DEDUP_BCAST_KEYS), ("fallback", 0, 0)):
+        monkeypatch.setattr(table_mod, "TABLE_SLICE_ROWS", slice_rows)
+        monkeypatch.setattr(table_mod, "DEDUP_BCAST_KEYS", keys)
+        frames.clear()
+        root = str(tmp_path_factory.mktemp(f"lake_plan_{route}") / "pages")
+        table = LakeTable.create(spark, root, pages_schema(), "url",
+                                 num_buckets=8, write_mode="mor")
+        CdcEngine(spark, table).run(plog)
+        assert len(frames) == 1  # one batch, one survivor write
+        plans[route] = frames[0]._jdf.queryExecution().executedPlan().toString()
+
+    def count(pattern, plan):
+        return len(re.findall(pattern, plan))
+
+    shuffle = r"(?<!Broadcast)Exchange "
+    p = plans["slice"]
+    assert count(shuffle, p) == 1, p
+    assert count(r"REPARTITION_BY_NUM", p) == 1, p
+    assert count(r"\bSort \[", p) == 1, p
+    assert count(r"BroadcastExchange", p) == 0, p
+    p = plans["two_pass"]
+    assert count(shuffle, p) == 1 and count(r"REPARTITION_BY_NUM", p) == 1, p
+    assert count(r"BroadcastExchange", p) == 1, p
+    assert count(r"LeftSemi", p) == 1 and count(r"Aggregate", p) == 0, p
+    p = plans["fallback"]
+    assert count(shuffle, p) == 2 and count(r"REPARTITION_BY_NUM", p) == 1, p
+    assert count(r"partial_max_by", p) == 1, p
+    # the partial aggregate runs below (before) the first exchange
+    assert p.index("partial_max_by") > p.index("ENSURE_REQUIREMENTS"), p
 
 
 def test_dedup_bcast_and_fallback_paths_identical(spark, change_log,
@@ -320,12 +454,7 @@ def test_dedup_bcast_and_fallback_paths_identical(spark, change_log,
         CdcEngine(spark, table).run(change_log)
         # only the two-pass routes run (and checkpoint) a pass 1
         assert bool(pass1) == (slice_rows == 0)
-        rows = {}
-        for r in table.read().collect():
-            d = r.asDict()
-            rows[d["url"]] = {k: (bytes(v) if isinstance(v, bytearray) else v)
-                              for k, v in d.items()}
-        states.append(rows)
+        states.append(_state(table))
     assert states[0] and states[0] == states[1] == states[2]
 
 

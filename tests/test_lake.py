@@ -234,6 +234,50 @@ def test_alter_retries_through_concurrent_commit(spark, tmp_path):
     assert [f.name for f in b.snapshot.schema.fields].count("tags") == 1
 
 
+def test_replayed_widen_commits_once(spark, tmp_path):
+    """A widen to the column's current type is a no-op like a re-add:
+    three replays of the same widen-plus-add publish one snapshot and
+    log each op once."""
+    schema = T.StructType([T.StructField("url", T.StringType(), False),
+                           T.StructField("n", T.IntegerType(), True)])
+    table = LakeTable.create(spark, str(tmp_path / "w"), schema, "url",
+                             num_buckets=2)
+    version = table.snapshot.version
+    ops = [{"op": "widen", "name": "n", "type": "bigint"},
+           {"op": "add", "name": "tag", "type": "string"}]
+    for _ in range(3):
+        table.alter(ops)
+    snap = table.refresh().snapshot
+    assert snap.version == version + 1
+    assert snap.schema_log == ops
+    assert snap.schema["n"].dataType.simpleString() == "bigint"
+
+
+def test_refresh_reads_only_a_newer_snapshot(spark, tmp_path, monkeypatch):
+    """refresh() lists the snapshot versions and reads a snapshot only
+    when a newer one than the handle's is published: snapshots are
+    immutable, so a current handle (a live tail that is the table's one
+    writer) pays a listing, not a read."""
+    import tenzir_spark.lake.table as table_mod
+
+    root = str(tmp_path / "rf")
+    a = LakeTable.create(spark, root, SCHEMA, "url", num_buckets=2)
+    b = LakeTable.load(spark, root)
+    reads = []
+    latest = table_mod.latest_snapshot
+
+    def counting(*args, **kwargs):
+        reads.append(1)
+        return latest(*args, **kwargs)
+
+    monkeypatch.setattr(table_mod, "latest_snapshot", counting)
+    assert a.refresh().snapshot.version == 1 and not reads
+    b.alter([{"op": "add", "name": "tags", "type": "string"}])
+    reads.clear()
+    assert a.refresh().snapshot.version == 2 and len(reads) == 1
+    assert "tags" in a.snapshot.schema.fieldNames()
+
+
 def test_expire_snapshots_reclaims_replaced_files(spark, tmp_path):
     """CoW merges replace bucket files; expire_snapshots reclaims every
     file no retained snapshot references, and the live read is intact."""

@@ -34,13 +34,43 @@ AUDIT = ["where_select", "summarize", "sort", "join_agg", "tpch_q6",
 # Engine-path plan audited by hand (not a board query); kept here so
 # regenerating the file doesn't lose it.
 CDC_FOOTER = """
+## cdc one-slice dedup (engine path, `lake/table.py _prepare_mor`)
+
+Not a board query — the plan `_prepare_mor` builds when the batch
+holds at most one table slice (65,536 rows; every live-tail
+micro-batch). The batch is repartitioned by bucket before its
+`max_by` aggregate. Verified shape at local[4], 8 buckets, a 6,000-row
+batch (6 epochs) read from an epoch-partitioned parquet log:
+
+```
+ArrowEvalPython extract_text_udf
++- SortAggregate(key=[__b, key], max_by(struct(payload), __lsn))
+   +- SortAggregate(key=[__b, key], partial_max_by(...))
+      +- Sort [__b, key]
+         +- Exchange hashpartitioning(__b, nb), REPARTITION_BY_NUM
+            +- scan (key, lsn, op, payload) + __b
+```
+
+- 1 exchange, 1 sort. `HashPartitioning(__b)` satisfies the
+  aggregate's `ClusteredDistribution(__b, key)`, so no
+  `hashpartitioning(__b, key)` exchange is planned, and the survivors
+  leave the aggregate clustered by bucket for the write. AQE does not
+  coalesce a `REPARTITION_BY_NUM` exchange.
+- A slice's raw rows shuffle (at most 65,536); there is no map-side
+  combine ahead of the exchange. `test_slice_route_plans_one_exchange`
+  pins this shape and the other two.
+- The at-scale fallback (no row count, or a pass 1 that overflows the
+  broadcast key cap) keeps the map-side partial aggregate ahead of an
+  `Exchange hashpartitioning(__b, key)` (the shape audited above as
+  `dedup_max_lsn`), then the nb-partition bucket exchange: 2 exchanges.
+  The map-side combine is its hot-key defense at scale.
+
 ## cdc broadcast two-pass dedup (engine path, `lake/table.py _prepare_mor`)
 
 Not a board query — the plan `_prepare_mor` builds when the batch
 holds more than one table slice (65,536 rows) and its row bound fits a
-broadcast (r5; a batch of at most one slice and the at-scale fallback
-both take struct `max_by`, audited above as `dedup_max_lsn`). Verified
-shape at local[4], 16 buckets, 100k-event batch (4 epochs):
+broadcast (r5). Verified shape at local[4], 16 buckets, 100k-event
+batch (4 epochs):
 
 ```
 pass 1 (eager localCheckpoint):
