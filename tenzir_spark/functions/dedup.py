@@ -272,32 +272,6 @@ def md5_base_hash(col: Column) -> Column:
     return md5_base60(col) % F.lit(_MH_PRIME)
 
 
-def minhash_signature(shingles: Column, n_hashes: int = 64, seed: int = 1,
-                      hash_family: str = "xxhash64") -> Column:
-    """Array of n minhashes: min over hash(shingle, i). Empty shingle sets
-    get nulls (excluded from candidates).
-
-    ``hash_family``:
-    - ``xxhash64`` (default): fastest, JVM-native 64-bit ints.
-    - ``md5``: one md5 per shingle -> 60-bit int -> n derived values via
-      (a_i*h + b_i) mod p. Bit-identical reproducible in any engine with
-      md5 (the DuckDB correctness oracle recomputes it).
-    """
-    if hash_family == "md5":
-        sigs = [
-            F.array_min(F.transform(
-                shingles,
-                lambda s, a=a, b=b: (F.lit(a) * md5_base_hash(s) + F.lit(b)) % F.lit(_MH_PRIME)))
-            for a, b in minhash_params(n_hashes, seed)
-        ]
-    else:
-        sigs = [
-            F.array_min(F.transform(shingles, lambda s: F.xxhash64(s, F.lit(seed + i))))
-            for i in range(n_hashes)
-        ]
-    return F.array(*sigs)
-
-
 def _first_band_mask(eq, band_a, band_b, bands: int, rows_per_band: int):
     """FIRST-COLLIDING-BAND emission for minhash bucket pairs: True where
     the lowest band whose signature slices fully agree (``eq`` is the

@@ -46,27 +46,6 @@ def long_to_ipv4(col: Column) -> Column:
     )
 
 
-def is_ipv4(col: Column | str) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return c.rlike(r"^\d{1,3}(\.\d{1,3}){3}$")
-
-
-def in_subnet(col: Column | str, cidr: str) -> Column:
-    """IPv4 JVM fast path; see expr.ip_in_subnet."""
-    from tenzir_spark.expr import ip_in_subnet
-    c = F.col(col) if isinstance(col, str) else col
-    return ip_in_subnet(c, cidr)
-
-
-def subnet_struct(cidr_col: Column | str) -> Column:
-    """'10.0.0.0/8' -> struct{addr string, prefix int} — the reference's
-    subnet = {ip, uint8} layout (type.hpp:795-810)."""
-    c = F.col(cidr_col) if isinstance(cidr_col, str) else cidr_col
-    parts = F.split(c, "/")
-    return F.struct(parts.getItem(0).alias("addr"),
-                    parts.getItem(1).cast("int").alias("prefix"))
-
-
 # ------------------------------------------------------- v4+v6 (pandas UDF)
 
 @F.pandas_udf(T.StringType())

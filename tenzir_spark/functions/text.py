@@ -33,23 +33,6 @@ def token_count(col: Column | str) -> Column:
     return F.size(tokens(col))
 
 
-def bpe_ish_token_count(col: Column | str) -> Column:
-    """Sub-word-ish token count: splits on whitespace AND punctuation and
-    counts 4-char chunks, a cheap deterministic proxy for BPE token counts
-    (ceil(len/4) per word is the common ~4-chars-per-token heuristic)."""
-    c = F.col(col) if isinstance(col, str) else col
-    words = F.filter(F.split(c, r"[\s\p{Punct}]+"), lambda t: t != "")
-    return F.aggregate(
-        words, F.lit(0),
-        lambda acc, w: acc + F.ceil(F.length(w) / F.lit(4.0)).cast("int"),
-    )
-
-
-def char_count(col: Column | str) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return F.length(c)
-
-
 def punct_ratio(col: Column | str) -> Column:
     """punctuation chars / total chars (0.0 for empty)."""
     c = F.col(col) if isinstance(col, str) else col

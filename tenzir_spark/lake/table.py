@@ -10,8 +10,11 @@ from __future__ import annotations
 import time
 import uuid
 from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import replace
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -33,11 +36,6 @@ from tenzir_spark.lake.format import (
 )
 from tenzir_spark.sources.formats import read_parquet
 
-try:
-    import pyarrow.parquet as pq
-except ImportError:  # pragma: no cover
-    pq = None
-
 CHECKPOINT_DIR = "_checkpoints"
 # publish attempts of one commit before a CommitConflict reaches the caller
 COMMIT_TRIES = 20
@@ -56,6 +54,8 @@ _WIDEN_OK = {
 TABLE_SLICE_ROWS = 65_536
 DEDUP_BCAST_KEYS = 1_000_000
 EXACT_MAX_ROWS = 512_000_000
+# compact() merges a CoW bucket's files below 0.8x this many rows
+COMPACT_TARGET_ROWS = 4_194_304
 
 
 class LakeTable:
@@ -242,6 +242,24 @@ class LakeTable:
         return (rows.groupBy(*group).agg(row.alias("__r"))
                 .select(*group, *[F.col(f"__r.{c}").alias(c) for c in others]))
 
+    def _by_bucket(self, df: DataFrame) -> DataFrame:
+        """``df`` with its bucket column __b, in an explicit nb-partition
+        repartition by bucket: the shape _write_bucketed takes. AQE does
+        not coalesce it, so a small write spreads over ~nb tasks, not one
+        (round 5 measured that collapse as a flat 2.5 s tail)."""
+        nb = self.snapshot.num_buckets
+        return (df.withColumn("__b", bucket_expr(self.snapshot.key_col, nb))
+                .repartition(nb, F.col("__b")))
+
+    def _latest_per_bucket(self, rows: DataFrame,
+                           order: str = "__lsn") -> DataFrame:
+        """_latest_per_key behind ONE bucket shuffle: HashPartitioning(__b)
+        satisfies the aggregate's clustering on (__b, key), so the plan
+        has one exchange and one sort, and its rows stay clustered by
+        bucket for the write. Raw rows shuffle with their payload: for
+        inputs with few rows per key."""
+        return self._latest_per_key(self._by_bucket(rows), order, by=("__b",))
+
     def row_count(self) -> int:
         return sum(f.rows for f in self.snapshot.files)
 
@@ -314,7 +332,8 @@ class LakeTable:
         if self.mode == "mor":
             df = df.withColumn("__lsn", F.lit(-1).cast("long")) \
                    .withColumn("__op", F.lit("upsert"))
-        self._commit_files(self._write_bucketed(df), replace_buckets=None)
+        self._commit_files(self._write_bucketed(self._by_bucket(df)),
+                           replace_buckets=None)
 
     def merge(self, changes: DataFrame, epoch: int | str,
               op_col: str = "op", lsn_col: str = "lsn") -> dict:
@@ -377,12 +396,12 @@ class LakeTable:
         the buckets they touch and replace those buckets, with every
         ledger entry, in one snapshot. Base rows rank below every change,
         so a change wins whatever its lsn; base files carry no
-        __lsn/__op. If a concurrent writer replaced a touched bucket
+        __lsn/__op. A key has a base row and a survivor at most, so the
+        fold is _latest_per_bucket: one bucket shuffle serves the resolve
+        and the write. If a concurrent writer replaced a touched bucket
         since, the fold recomputes against the refreshed table. The
         survivor files are never referenced, so their commit dir goes."""
         touched = sorted({f.bucket for f in survivors})
-        key = self.snapshot.key_col
-        nb = self.snapshot.num_buckets
         try:
             for _ in range(5):
                 base = self.snapshot
@@ -391,16 +410,11 @@ class LakeTable:
                         .withColumn("__rank", F.lit(0)))
                 changes = (self._scan(survivors).drop("__lsn")
                            .withColumn("__rank", F.lit(1)))
-                # a key has a base row and a survivor at most, so partial
-                # aggregation saves nothing: one shuffle by bucket serves
-                # both the resolve and the clustered write
-                rows = (live.unionByName(changes)
-                        .withColumn("__b", bucket_expr(key, nb))
-                        .repartition(nb, F.col("__b")))
-                merged = (self._latest_per_key(rows, "__rank", by=("__b",))
+                merged = (self._latest_per_bucket(live.unionByName(changes),
+                                                  "__rank")
                           .filter(F.col("__op") != "delete")
                           .drop("__op", "__rank"))
-                new_files = self._write_bucketed(merged, clustered=True)
+                new_files = self._write_bucketed(merged)
                 try:
                     self._commit_files(new_files, replace_buckets=touched,
                                        base_files=base.files,
@@ -434,16 +448,11 @@ class LakeTable:
 
         * **struct max_by, one slice** (batch_rows <= TABLE_SLICE_ROWS =
           65,536, the reference's table-slice size and the Arrow batch
-          size of get_spark): the batch is repartitioned into nb
-          partitions by bucket FIRST, then groupBy(__b, key) takes
-          max_by. HashPartitioning(__b) satisfies the aggregate's
-          clustering on (__b, key), so the plan has ONE exchange (the
-          REPARTITION_BY_NUM, which AQE does not coalesce) and one sort,
-          and the survivors leave the aggregate still clustered by
-          bucket for the write. A slice is small enough that shuffling
-          its raw rows costs less than a second exchange. It runs inside
-          the delta write's job, so a live-tail micro-batch pays no extra
-          Spark job for its dedup. The two-pass would add four (pass-1
+          size of get_spark): _latest_per_bucket, the lake's one-exchange
+          dedup that compaction and the CoW fold use too. A slice is
+          small enough that shuffling its raw rows costs less than a
+          second exchange. It runs inside the delta write's job, so a
+          live-tail micro-batch pays no extra Spark job for its dedup. The two-pass would add four (pass-1
           aggregate, eager checkpoint, stats collect, broadcast build);
           on the bench log it measured slower up to 64k rows, level at
           100k and faster from 1M rows on (CHANGES.md has the sweep).
@@ -463,8 +472,9 @@ class LakeTable:
           pushed predicate: on an lsn-ordered log (any WAL) it prunes
           whole row groups — 94.7% of the bench log's rows never decode
           (64M -> 3.4M). No payload-carrying shuffle AT ALL: the only
-          exchange is the tiny pass-1 agg. Requires lsn to be unique per
-          key within the batch (a WAL position — the log contract).
+          exchange is the tiny pass-1 agg, and the survivors then
+          _by_bucket. Requires lsn to be unique per key within the batch
+          (a WAL position — the log contract).
         * **struct max_by fallback** (no row count — a single-epoch
           merge() — or pass 1 overflows DEDUP_BCAST_KEYS, the
           10^10-scale regime where a batch touches hundreds of millions
@@ -474,13 +484,9 @@ class LakeTable:
           — and only survivors shuffle, by (__b, key) and then into the
           nb bucket partitions.
 
-        Every route ends with the survivors in an EXPLICIT nb-partition
-        repartition by bucket, which AQE respects, so the post-dedup
-        text UDF and the parquet write spread over ~nb tasks instead of
-        the single task AQE's advisory-size coalescing collapses a small
-        survivor set into (round 5 measured that collapse as a flat 2.5 s
-        single-task tail). File count stays <=nb: partitionBy splits by
-        __b inside each task.
+        Every route ends with the survivors in the nb-partition bucket
+        repartition (_by_bucket), so the post-dedup text UDF and the
+        write spread over ~nb tasks.
 
         No target read, no join against the table; rows_applied and the
         lsn watermark come from the parquet footers of the files just
@@ -517,14 +523,9 @@ class LakeTable:
                     (F.col(key) == F.col("__mxk"))
                     & (F.col("__lsn") == F.col("__mx")),
                     "leftsemi")
-                delta = delta.withColumn("__b", bucket_expr(key, nb))
-                delta = delta.repartition(nb, F.col("__b"))
+                delta = self._by_bucket(delta)
             elif batch_rows is not None and batch_rows <= TABLE_SLICE_ROWS:
-                # the bucket shuffle clusters by (__b, key) already
-                delta = self._latest_per_key(
-                    delta.withColumn("__b", bucket_expr(key, nb))
-                    .repartition(nb, F.col("__b")),
-                    by=("__b",))
+                delta = self._latest_per_bucket(delta)
             else:
                 delta = self._latest_per_key(
                     delta.withColumn("__b", bucket_expr(key, nb)),
@@ -536,8 +537,7 @@ class LakeTable:
                 if f.name not in delta.columns:
                     delta = delta.withColumn(f.name,
                                              F.lit(None).cast(f.dataType))
-            new_files = self._write_bucketed(delta, kind="delta",
-                                             clustered=True)
+            new_files = self._write_bucketed(delta, kind="delta")
         finally:
             if pass1 is not None:
                 # a JVM GC would release the checkpoint blocks only once
@@ -555,24 +555,18 @@ class LakeTable:
 
     # ------------------------------------------------------------- internals
 
-    def _write_bucketed(self, df: DataFrame, kind: str = "base",
-                        clustered: bool = False) -> list[DataFile]:
-        """Write rows as one parquet file per bucket under a fresh commit
-        dir; returns DataFile entries with footer-accurate stats.
-        ``clustered=True`` promises df already carries a __b bucket column
-        and is hash-distributed by it — no extra shuffle is added;
-        otherwise rows go through the same explicit nb-partition
-        repartition as _prepare_mor's."""
-        key = self.snapshot.key_col
-        nb = self.snapshot.num_buckets
-        stat_cols = [key] + (["__lsn"] if "__lsn" in df.columns else [])
+    def _write_bucketed(self, df: DataFrame, kind: str = "base") -> list[DataFile]:
+        """Write bucket-partitioned rows (_by_bucket's shape: a __b
+        column, hash-distributed by it) as one parquet file per bucket
+        under a fresh commit dir — partitionBy splits by __b inside each
+        task, so the file count stays <= nb. Returns DataFile entries
+        with footer-accurate stats of the key, __lsn and __op (the
+        last lets compact() find the files that may hold tombstones)."""
+        stat_cols = [self.snapshot.key_col] + [
+            c for c in ("__lsn", "__op") if c in df.columns]
         commit = f"commit-{uuid.uuid4().hex[:12]}"
         out_dir = self.io.join(self.root, DATA_DIR, commit)
-        if not clustered:
-            df = (df.withColumn("__b", bucket_expr(key, nb))
-                  .repartition(nb, F.col("__b")))
         (df.write.mode("overwrite").partitionBy("__b").parquet(out_dir))
-        files: list[DataFile] = []
         schema_epoch = len(self.snapshot.schema_log)
         targets: list[tuple[int, str, str]] = []
         for bdir in self.io.list(out_dir):
@@ -592,10 +586,10 @@ class LakeTable:
         # SERIAL path (Amdahl's s in BASELINE.md) — a thread pool turns
         # O(buckets) sequential opens into one round trip; object-store
         # backends benefit even more (per-request latency dominates)
-        from concurrent.futures import ThreadPoolExecutor
         with ThreadPoolExecutor(max_workers=min(16, max(len(targets), 1))) as ex:
             stats_list = list(ex.map(
                 lambda t: _footer_stats(t[1], stat_cols, self.io), targets))
+        files: list[DataFile] = []
         for (bucket, _fp, rel), (rows, stats) in zip(targets, stats_list):
             files.append(DataFile(rel, bucket, rows, schema_epoch, stats, kind))
         return files
@@ -757,10 +751,6 @@ class LakeTable:
         threaded like the write path's stats collection — O(files)
         small reads on the driver, never a data scan; at very large
         inventories audit bucket ranges incrementally."""
-        from concurrent.futures import ThreadPoolExecutor
-        if pq is None:  # pragma: no cover - pyarrow is baked in
-            return {"checked": 0, "missing": [], "mismatched": [],
-                    "repaired": False}
         snap = self.snapshot
 
         def probe(f: DataFile):
@@ -859,8 +849,6 @@ class LakeTable:
 
         Written with pyarrow on the driver — it is O(buckets) metadata, so
         spinning up a Spark job for it would be pure overhead."""
-        import pyarrow as pa
-
         e = int(epoch) if epoch.isdigit() else -1
         rows = [(e, f.bucket, f.rows, entry.get("lsn_watermark"),
                  float(entry["committed_at"])) for f in files] \
@@ -874,16 +862,15 @@ class LakeTable:
         })
         cp_dir = self.io.join(self.root, CHECKPOINT_DIR)
         self.io.makedirs(cp_dir)
-        if pq is not None:
-            # atomic publish through the FileIO seam: serialize to a
-            # buffer, put_atomic writes-complete-then-swaps — a crash
-            # never leaves a truncated parquet for checkpoints() to
-            # choke on, and an object-store backend is just a PUT
-            sink = pa.BufferOutputStream()
-            pq.write_table(tbl, sink)
-            name = f"cp-{epoch}-{uuid.uuid4().hex[:8]}.parquet"
-            self.io.put_atomic(self.io.join(cp_dir, name),
-                               sink.getvalue().to_pybytes())
+        # atomic publish through the FileIO seam: serialize to a buffer,
+        # put_atomic writes-complete-then-swaps — a crash never leaves a
+        # truncated parquet for checkpoints() to choke on, and an
+        # object-store backend is just a PUT
+        sink = pa.BufferOutputStream()
+        pq.write_table(tbl, sink)
+        name = f"cp-{epoch}-{uuid.uuid4().hex[:8]}.parquet"
+        self.io.put_atomic(self.io.join(cp_dir, name),
+                           sink.getvalue().to_pybytes())
 
     def checkpoints(self) -> DataFrame:
         path = self.io.join(self.root, CHECKPOINT_DIR)
@@ -893,40 +880,41 @@ class LakeTable:
                     " lsn_watermark long, commit_epoch double")
         return read_parquet(self.spark, path)
 
-    def compact(self, target_rows: int = 4_194_304, max_deltas: int = 0,
-                purge_deletes_below_lsn: int | None = None) -> None:
+    def compact(self, purge_deletes_below_lsn: int | None = None) -> None:
         """Fold small / delta files back into one base file per bucket —
         the reference's ``rebuild`` (rebuild.cpp:45-47 merges partitions
-        under 0.8x max size; Iceberg rewrite_data_files).
+        under 0.8x max size; Iceberg rewrite_data_files), behind one
+        bucket shuffle (_latest_per_bucket / _by_bucket).
 
-        CoW: merges buckets with multiple undersized files.
-        MoR: resolves buckets whose delta-file count exceeds
-        ``max_deltas`` down to a single base file. Delete rows are KEPT as
-        tombstones (with their resolved max __lsn) so a later out-of-order
+        CoW: merges buckets with several files below 0.8x
+        COMPACT_TARGET_ROWS rows. MoR: resolves every bucket holding a
+        delta to one base file (a lone delta is re-tagged). Delete rows
+        are KEPT as tombstones (with their resolved max __lsn) so a later out-of-order
         upsert with a lower lsn can never resurrect a deleted row; readers
         filter them (read() does). ``purge_deletes_below_lsn`` physically
         drops tombstones older than the given watermark — safe once every
-        writer's lsn floor is past it (Iceberg's expire-snapshots analog).
+        writer's lsn floor is past it (Iceberg's expire-snapshots analog);
+        it rewrites every bucket whose file stats leave room for one.
 
         Concurrent merges to the same buckets are detected at commit
         (ConcurrentMergeConflict) and the compaction recomputes."""
         for _ in range(5):
             try:
-                return self._compact_once(target_rows, max_deltas,
-                                          purge_deletes_below_lsn)
+                return self._compact_once(purge_deletes_below_lsn)
             except ConcurrentMergeConflict:
                 self.refresh()
         raise ConcurrentMergeConflict("exhausted compact recompute retries")
 
-    def _compact_once(self, target_rows: int, max_deltas: int,
-                      purge_deletes_below_lsn: int | None) -> None:
+    def _compact_once(self, purge: int | None) -> None:
         base = self.snapshot
         by_bucket: dict[int, list[DataFile]] = {}
         for f in base.files:
             by_bucket.setdefault(f.bucket, []).append(f)
         if self.mode == "mor":
+            tomb = {b for b, fs in by_bucket.items() if purge is not None
+                    and any(_may_hold_tombstone(f, purge) for f in fs)}
             need = [b for b, fs in by_bucket.items()
-                    if sum(1 for x in fs if x.kind == "delta") > max_deltas]
+                    if b in tomb or any(x.kind == "delta" for x in fs)]
             # METADATA-ONLY promotion for single-file buckets: a lone
             # delta is already per-key resolved (every merge batch dedups
             # to one row per key — the merge() contract / _prepare_mor's
@@ -937,38 +925,42 @@ class LakeTable:
             # snapshots), content is unchanged so a concurrent merge
             # computed from it stays valid, and older snapshots still
             # resolve the file as a delta to the identical result.
-            # Tombstone purging always takes the rewrite path.
-            rewrite = [b for b in need if len(by_bucket[b]) > 1
-                       or purge_deletes_below_lsn is not None]
+            rewrite = [b for b in need if b in tomb or len(by_bucket[b]) > 1]
         else:
             need = rewrite = [
-                b for b, fs in by_bucket.items()
-                if len(fs) > 1 and sum(x.rows for x in fs) < int(0.8 * target_rows)]
+                b for b, fs in by_bucket.items() if len(fs) > 1
+                and sum(x.rows for x in fs) < int(0.8 * COMPACT_TARGET_ROWS)]
         if not need:
             return
         promoted = [replace(by_bucket[b][0], kind="base")
                     for b in need if b not in rewrite]
         new_files: list[DataFile] = []
         if rewrite and self.mode == "mor":
-            rows = self._latest_per_key(self.read(buckets=rewrite, resolve=False))
-            if purge_deletes_below_lsn is not None:
-                rows = rows.filter(
-                    (F.col("__op") != "delete")
-                    | (F.col("__lsn") >= F.lit(int(purge_deletes_below_lsn))))
+            rows = self._latest_per_bucket(self.read(buckets=rewrite, resolve=False))
+            if purge is not None:
+                rows = rows.filter((F.col("__op") != "delete")
+                                   | (F.col("__lsn") >= F.lit(int(purge))))
             new_files = self._write_bucketed(rows)
         elif rewrite:
-            new_files = self._write_bucketed(self.read(buckets=rewrite))
+            new_files = self._write_bucketed(
+                self._by_bucket(self.read(buckets=rewrite)))
         # re-tagged and rewritten buckets publish in one snapshot
         self._commit_files(promoted + new_files, replace_buckets=need,
                            base_files=base.files)
+
+
+def _may_hold_tombstone(f: DataFile, below_lsn: int) -> bool:
+    """Whether ``f``'s footer stats leave room for a delete row with an
+    __lsn below ``below_lsn``; a file without those stats may hold one."""
+    op, lsn = f.stats.get("__op"), f.stats.get("__lsn")
+    return ((op is None or op["min"] <= "delete" <= op["max"])
+            and (lsn is None or lsn["min"] < below_lsn))
 
 
 def _footer_stats(path: str, stat_cols: list[str],
                   io: LocalFileIO | None = None) -> tuple[int, dict]:
     """Exact per-file stats from the parquet footer (no data read) —
     opened through the FileIO seam (pyarrow accepts any file-like)."""
-    if pq is None:
-        return 0, {}
     md = pq.ParquetFile((io or DEFAULT_IO).open_read(path)).metadata
     rows = md.num_rows
     stats: dict[str, dict] = {}

@@ -51,10 +51,6 @@ class Pipeline:
     # -- sources ------------------------------------------------------------
 
     @classmethod
-    def from_df(cls, df: DataFrame) -> "Pipeline":
-        return cls(df)
-
-    @classmethod
     def read_parquet(cls, spark: SparkSession, path: str) -> "Pipeline":
         return cls(read_parquet(spark, path))
 
@@ -161,11 +157,6 @@ class Pipeline:
         return self._wrap(fn(self._df))
 
     # -- storage engine (import/export; reference: import.cpp/export.cpp) ---
-
-    def import_into(self, table, epoch) -> dict:
-        """Sink into a lake table under the exactly-once ledger — the
-        reference's `import` (import.cpp:70)."""
-        return table.merge(self._df, epoch)
 
     @classmethod
     def export(cls, table, **read_kw) -> "Pipeline":

@@ -149,10 +149,6 @@ class ServeManager:
                 self._buffers[serve_id] = ServeBuffer(serve_id, buffer_size)
             return self._buffers[serve_id]
 
-    def has_buffer(self, serve_id: str) -> bool:
-        with self._lock:
-            return serve_id in self._buffers
-
     def stop_buffer(self, serve_id: str) -> None:
         with self._lock:
             buf = self._buffers.pop(serve_id, None)

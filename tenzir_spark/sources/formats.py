@@ -1364,11 +1364,6 @@ def export_csv_header(df: DataFrame) -> str:
     return ",".join(["type"] + list(df.columns))
 
 
-def write_ascii(df: DataFrame, path: str) -> None:
-    """ascii printer to a single file (cluster-safe copyMerge shape)."""
-    _assemble_parts(ascii_lines(df), path)
-
-
 # ------------------------------------------------------------------ syslog
 
 _SYSLOG_SCHEMA = (

@@ -1,20 +1,17 @@
-"""Kafka connector: offset-spec translation + stream builder.
+"""Kafka connector: offset-spec translation.
 
 Reference: plugins/kafka/src/plugin.cpp:43-47 parses the ``--offset``
 argument (``beginning | end | stored | <N> | -N``) and the consumer
 joins a balanced group honoring it (plugins/kafka/src/consumer.cpp).
 Spark has a native kafka source — the engine's job is translating the
-reference's offset language to ``startingOffsets``/per-partition JSON and
-building the readStream. No broker exists in this sandbox, so the
-builder is exercised in unit tests only down to the options dict.
+reference's offset language to ``startingOffsets``/per-partition JSON
+(the options dict a ``readStream.format("kafka")`` takes). The TQL
+``load_kafka`` path speaks the wire protocol itself (kafka_wire.py).
 """
 
 from __future__ import annotations
 
 import json
-
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 
 def parse_offset_spec(spec: str | int) -> dict:
@@ -70,43 +67,3 @@ def kafka_options(
     else:  # tail: resolvable only against live end offsets
         opts["__tail__"] = str(spec["offset"])
     return opts
-
-
-def read_kafka_stream(
-    spark: SparkSession,
-    topic: str,
-    brokers: str = "localhost:9092",
-    offset: str | int = "stored",
-    value_format: str = "json",
-    schema=None,
-) -> DataFrame:
-    """readStream from kafka, value parsed per ``value_format``.
-
-    Requires the spark-sql-kafka package on the classpath (present on
-    real clusters; absent in this sandbox — tests cover kafka_options()).
-    """
-    opts = kafka_options(topic, brokers, offset)
-    if "__tail__" in opts:
-        raise NotImplementedError(
-            "tail offsets (-N) need live end-offset resolution; "
-            "resolve against the broker and pass an absolute offset")
-    reader = spark.readStream.format("kafka")
-    for k, v in opts.items():
-        reader = reader.option(k, v)
-    raw = reader.load()
-    val = F.col("value").cast("string")
-    if value_format == "json" and schema is not None:
-        return raw.select(
-            F.col("key").cast("string").alias("key"),
-            F.from_json(val, schema).alias("data"),
-            "timestamp", "partition", "offset",
-        ).select("key", "data.*", "timestamp", "partition", "offset")
-    if value_format == "lines" or (value_format == "json" and schema is None):
-        return raw.select(F.col("key").cast("string").alias("key"),
-                          val.alias("value"), "timestamp", "partition", "offset")
-    raise ValueError(f"unsupported kafka value format {value_format!r}")
-
-
-def write_kafka_options(topic: str, brokers: str = "localhost:9092") -> dict[str, str]:
-    """Producer-side options (reference: plugins/kafka producer.cpp)."""
-    return {"kafka.bootstrap.servers": brokers, "topic": topic}

@@ -421,6 +421,63 @@ def test_slice_route_plans_one_exchange(spark, change_log, tmp_path_factory,
     assert p.index("partial_max_by") > p.index("ENSURE_REQUIREMENTS"), p
 
 
+def test_lake_rewrites_plan_one_exchange(spark, tmp_path, monkeypatch):
+    """The frame each lake rewrite hands _write_bucketed — a MoR rewrite
+    compaction, a CoW compaction and the CoW fold of a merge — holds
+    exactly one shuffle exchange: the bucket REPARTITION_BY_NUM of
+    _latest_per_bucket (MoR compaction, fold) or _by_bucket (CoW
+    compaction)."""
+    import re
+
+    from pyspark.sql import types as T
+
+    import tenzir_spark.lake.table as table_mod
+
+    schema = T.StructType([T.StructField("url", T.StringType(), False),
+                           T.StructField("v", T.LongType(), True)])
+    frames = []
+    write = table_mod.LakeTable._write_bucketed
+
+    def capture(self, df, *args, **kwargs):
+        frames.append(df)
+        return write(self, df, *args, **kwargs)
+
+    monkeypatch.setattr(table_mod.LakeTable, "_write_bucketed", capture)
+
+    def merge(table, rows, epoch):
+        table.merge(spark.createDataFrame(
+            rows, "url string, op string, lsn long, v long"), epoch)
+
+    changes = ([(f"u{i}", "update", 100 + i, -i) for i in range(0, 32, 2)]
+               + [("u1", "delete", 200, None)])
+    plans = {}
+    mor = LakeTable.create(spark, str(tmp_path / "mor"), schema, "url",
+                           num_buckets=4, write_mode="mor")
+    merge(mor, [(f"u{i}", "insert", i, i) for i in range(32)], 0)
+    merge(mor, changes, 1)
+    frames.clear()
+    mor.compact()
+    assert len(frames) == 1  # the buckets with two deltas, in one write
+    plans["mor_compact"] = frames[0]
+    cow = LakeTable.create(spark, str(tmp_path / "cow"), schema, "url",
+                           num_buckets=4, write_mode="cow")
+    for part in range(2):  # two files per bucket
+        cow.append(spark.createDataFrame(
+            [(f"u{i}", i) for i in range(part, 32, 2)], schema))
+    frames.clear()
+    cow.compact()
+    assert len(frames) == 1
+    plans["cow_compact"] = frames[0]
+    frames.clear()
+    merge(cow, changes, 0)
+    assert len(frames) == 2  # the survivor write, then the fold
+    plans["cow_fold"] = frames[1]
+    for name, df in plans.items():
+        p = df._jdf.queryExecution().executedPlan().toString()
+        assert len(re.findall(r"(?<!Broadcast)Exchange ", p)) == 1, (name, p)
+        assert len(re.findall(r"REPARTITION_BY_NUM", p)) == 1, (name, p)
+
+
 def test_dedup_bcast_and_fallback_paths_identical(spark, change_log,
                                                   tmp_path_factory,
                                                   monkeypatch):

@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from tenzir_spark.lake import LakeTable
+from tenzir_spark.lake.format import bucket_expr
 
 SCHEMA = T.StructType([
     T.StructField("url", T.StringType(), False),
@@ -50,7 +51,28 @@ def test_mor_idempotent_replay(table, spark):
     assert {r.url: r.v for r in table.read().collect()} == {"a": 10}
 
 
-def test_mor_compaction_preserves_state(table, spark):
+def _tombstones(table):
+    """Keys with a delete row among the table's raw (unresolved) rows."""
+    return {r.url for r in table.read(resolve=False)
+            .filter(F.col("__op") == "delete").collect()}
+
+
+def _keys_by_bucket(spark, num_buckets):
+    rows = (spark.createDataFrame([(f"k{i}",) for i in range(64)], "url string")
+            .select("url", bucket_expr("url", num_buckets).alias("b"))
+            .collect())
+    out = {}
+    for r in rows:
+        out.setdefault(r.b, []).append(r.url)
+    return out
+
+
+def test_mor_compaction_preserves_state(table, spark, tmp_path):
+    """Compaction leaves the resolved read() unchanged, every file base
+    and every tombstone in place (no purge asked for), on two inputs:
+    merged deltas only, and appended base rows (unique keys, __lsn -1)
+    under merges whose files span schema epochs (an add and a rename
+    between merges)."""
     _merge(table, spark, [("a", "insert", 1, 10), ("b", "insert", 2, 20)], 0)
     _merge(table, spark, [("a", "update", 3, 11), ("b", "delete", 4, None),
                           ("c", "insert", 5, 30)], 1)
@@ -65,9 +87,68 @@ def test_mor_compaction_preserves_state(table, spark):
     after = {r.url: r.v for r in table.read().collect()}
     assert before == after == {"a": 11, "c": 30}
     assert all(f.kind == "base" for f in table.snapshot.files)
+    assert _tombstones(table) == {"b"}
     # post-compaction read takes the no-shuffle fast path and stays correct
     _merge(table, spark, [("a", "update", 6, 12)], 2)
     assert {r.url: r.v for r in table.read().collect()} == {"a": 12, "c": 30}
+
+    evolved = LakeTable.create(spark, str(tmp_path / "evolved"), SCHEMA,
+                               "url", num_buckets=2, write_mode="mor")
+    evolved.append(spark.createDataFrame([(f"p{i}", i) for i in range(8)],
+                                         SCHEMA))
+    _merge(evolved, spark, [("p0", "update", 1, 100), ("q0", "insert", 2, 7),
+                            ("p1", "delete", 3, None)], 0)
+    evolved.alter([{"op": "add", "name": "tag", "type": "string"}])
+    evolved.merge(spark.createDataFrame(
+        [("p2", "update", 4, 200, "x"), ("q1", "insert", 5, 8, "y"),
+         ("p0", "delete", 6, None, None)],
+        "url string, op string, lsn long, v long, tag string"), 1)
+    evolved.alter([{"op": "rename", "from": "tag", "to": "label"}])
+    evolved.merge(spark.createDataFrame(
+        [("p3", "update", 7, 300, "z"), ("q0", "update", 8, 70, "w")],
+        "url string, op string, lsn long, v long, label string"), 2)
+    epochs = {}
+    for f in evolved.snapshot.files:
+        epochs.setdefault(f.bucket, set()).add(f.schema_epoch)
+    assert max(len(e) for e in epochs.values()) > 1
+    before = {r.url: r.asDict() for r in evolved.read().collect()}
+    assert _tombstones(evolved) == {"p0", "p1"}
+    evolved.compact()
+    assert {r.url: r.asDict() for r in evolved.read().collect()} == before
+    assert before["p3"] == {"url": "p3", "v": 300, "label": "z"}
+    assert all(f.kind == "base" for f in evolved.snapshot.files)
+    assert _tombstones(evolved) == {"p0", "p1"}
+
+
+def test_mor_purge_deletes_below_lsn(table, spark):
+    """compact(purge_deletes_below_lsn=w) drops every tombstone below w
+    from both of its homes — a base file a rewrite compaction wrote and
+    a lone delete delta a re-tag promoted — keeps a tombstone at w, and
+    leaves a bucket whose base file holds no delete unwritten."""
+    keys = _keys_by_bucket(spark, 4)
+    rewritten, retagged, clean = sorted(keys)[:3]
+    a1, a2, a3 = keys[rewritten][:3]
+    b1, d1 = keys[retagged][0], keys[clean][0]
+    _merge(table, spark, [(a1, "insert", 1, 1), (a2, "insert", 2, 2),
+                          (a3, "insert", 3, 3), (d1, "insert", 4, 4)], 0)
+    _merge(table, spark, [(a1, "delete", 10, None), (a3, "delete", 100, None),
+                          (d1, "update", 5, 40)], 1)
+    _merge(table, spark, [(b1, "delete", 11, None)], 2)
+    table.compact()
+    assert all(f.kind == "base" for f in table.snapshot.files)
+    assert _tombstones(table) == {a1, a3, b1}
+    before = {r.url: r.v for r in table.read().collect()}
+    assert before == {a2: 2, d1: 40}
+    clean_paths = {f.path for f in table.snapshot.files if f.bucket == clean}
+    version = table.snapshot.version
+    table.compact(purge_deletes_below_lsn=100)
+    assert table.snapshot.version == version + 1
+    assert _tombstones(table) == {a3}
+    assert {r.url: r.v for r in table.read().collect()} == before
+    assert {f.path for f in table.snapshot.files
+            if f.bucket == clean} == clean_paths
+    assert not [f for f in table.snapshot.files if f.bucket == retagged]
+    assert all(f.kind == "base" for f in table.snapshot.files)
 
 
 def test_mor_compact_single_delta_is_metadata_only(table, spark):

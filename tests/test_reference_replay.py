@@ -2054,7 +2054,7 @@ def test_rebuild_undersized_partitions(spark, tmp_path):
         by_bucket[f_.bucket] = by_bucket.get(f_.bucket, 0) + 1
     assert len(t.snapshot.files) == 16  # step_02.ref
     before = sorted((r.k, r.imp, r.raw) for r in t.read().collect())
-    t.compact(target_rows=4_194_304)  # every file is undersized
+    t.compact()  # every file is undersized
     after_files = t.snapshot.files
     # step_05.ref: every bucket that had 2 files folds to 1
     assert len(after_files) == 8

@@ -101,6 +101,38 @@ ArrowEvalPython extract_text_udf
 - The partial `HashAggregate` before the agg exchange is the Zipf
   hot-key defense: each input partition reduces a hot domain's rows to
   one (key, max) pair pre-shuffle.
+
+## lake compaction (engine path, `lake/table.py compact`)
+
+Not a board query — the frames `compact()` and the copy-on-write fold
+hand to `_write_bucketed`. Verified shape of a merge-on-read rewrite
+at local[4], 8 buckets, a bucket's delta files from two schema epochs
+(an `add` between merges):
+
+```
+Project [__b, key, __r.*]
++- SortAggregate(key=[__b, key], max_by(struct(payload, __lsn, __op), __lsn))
+   +- SortAggregate(key=[__b, key], partial_max_by(...))
+      +- Sort [__b, key]
+         +- Exchange hashpartitioning(__b, nb), REPARTITION_BY_NUM
+            +- Union                       <- one scan per schema epoch
+               :- scan (epoch 0 files) + typed nulls + __b
+               +- scan (epoch 1 files) + __b
+```
+
+- 1 exchange, 1 sort: `_latest_per_bucket`, the one-slice plan above.
+  Before, the rewrite grouped by key behind an
+  `Exchange hashpartitioning(__b, key)` and then repartitioned by
+  bucket: 2 exchanges. A key has at most one row per file in its
+  bucket, so a map-side partial aggregate saves little here.
+- The copy-on-write fold (base rows ∪ survivors, ranked) plans the
+  same shape over a `__rank` order; a copy-on-write compaction is the
+  bare bucket exchange (`_by_bucket`) over the scan.
+  `test_lake_rewrites_plan_one_exchange` pins all three frames.
+- `purge_deletes_below_lsn` adds a `Filter` above the aggregate and
+  selects buckets from file stats: a file whose `__op` footer min/max
+  brackets `delete` and whose `__lsn` min is below the watermark (or
+  that lacks those stats) sends its bucket through the rewrite.
 """
 
 
